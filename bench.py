@@ -20,6 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from lcmap_blackmagic_spark.registry import QUERIES
 from lcmap_blackmagic_spark.session import get_session
+from tools.bench_families import families
 
 # Headline set: the scan/agg, join, explode, window, and text-heavy
 # queries — the shapes that dominate at scale.
@@ -386,10 +387,14 @@ def main() -> None:
         # "value" across rounds sees "failed_queries" right beside it
         detail["errors"] = len(failed)
         detail["failed_queries"] = failed
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "bench_detail.json")
-    with open(detail_path, "w") as fh:
-        json.dump(detail, fh, indent=1)
+    # bench_detail.json and the BENCH_FAMILIES.json derived from it
+    # are written in one step, so no commit can hold half the pair
+    repo = os.path.dirname(os.path.abspath(__file__))
+    fams = families(detail)
+    for name, doc in (("bench_detail.json", detail),
+                      ("BENCH_FAMILIES.json", fams)):
+        with open(os.path.join(repo, name), "w") as fh:
+            json.dump(doc, fh, indent=1)
 
     # The driver captures only the LAST 2000 characters of stdout and
     # parses the JSON line out of that window — round 8's line (74
@@ -416,7 +421,7 @@ def main() -> None:
     # shape.  The valve stays as the last resort for a host meltdown
     # or a mass-failure ERR map.
     def compact(v):
-        if not isinstance(v, float):
+        if not isinstance(v, (int, float)):     # {"err": ...}
             return "ERR"
         r = round(v, 1)
         return int(r) if r == int(r) else r

@@ -58,7 +58,8 @@ def prediction_pipeline(segments: DataFrame, aux: DataFrame,
     from ..ml.predict import predict_probabilities
     from ..operators.unions import default_predictions, group_data
 
-    inputs = prediction_inputs(segments, aux, month, day)
+    inputs = prediction_inputs(segments, aux, month, day) \
+        .localCheckpoint(eager=False)
     defaults, data = group_data(inputs)
     predicted = (predict_probabilities(data, model_bytes, "independent")
                  .drop("independent"))

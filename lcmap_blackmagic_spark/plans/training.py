@@ -30,9 +30,11 @@ def chips_predicate(chips: Sequence[tuple[int, int]] | None):
     (tile.py:151-170). None = whole extent."""
     if not chips:
         return F.lit(True)
-    # literal structs must match the key columns' BIGINT type — a bare
-    # Python int literal makes an INT struct, which isin() rejects
-    return F.struct(F.col("cx"), F.col("cy")).isin(
+    # both sides of isin() are BIGINT structs: a bare Python int
+    # literal makes an INT struct, and storage.read infers the cx/cy
+    # partition columns as INT
+    return F.struct(F.col("cx").cast("bigint"),
+                    F.col("cy").cast("bigint")).isin(
         [F.struct(F.lit(cx).cast("bigint"), F.lit(cy).cast("bigint"))
          for (cx, cy) in chips])
 

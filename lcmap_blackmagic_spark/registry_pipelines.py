@@ -18,19 +18,22 @@ from pyspark.sql import functions as F
 from .registry import _t
 
 
-def q_lcmap_segment_detect(spark, sf_dir):
-    """UD1: raster → time-series assembly → per-pixel detection →
-    38-col segments (plans/segment.py). Fully oracle-checked: the
-    input chip is the md5-hash fixture (synth_ard_hash) and the
-    detector is closed-form integer-sum OLS, so DuckDB regenerates
-    the identical raster in SQL and reproduces the fitted slope /
-    intercept / RMSE bit-for-bit (_sql_segment_detect)."""
-    from .plans.segment import segment_pipeline
-    from .sources.fixtures import synth_ard_hash
-    ard = synth_ard_hash(spark, side=10)
-    return segment_pipeline(ard, side=10).select(
-        "cx", "cy", "px", "py", "sday", "eday", "curqa",
-        F.col("recoef")[0].alias("reslope"), "reint", "rermse")
+def _lcmap_detect(side: int):
+    """UD1 over one md5-hash chip of ``side``² pixels (side 100 is the
+    reference's chip): plans.segment.segment_pipeline, oracle-checked
+    bit-for-bit by _sql_segment_detect(side)."""
+    def q(spark, sf_dir):
+        from .plans.segment import segment_pipeline
+        from .sources.fixtures import synth_ard_hash
+        ard = synth_ard_hash(spark, side=side)
+        return segment_pipeline(ard, side=side).select(
+            "cx", "cy", "px", "py", "sday", "eday", "curqa",
+            F.col("recoef")[0].alias("reslope"), "reint", "rermse")
+    return q
+
+
+q_lcmap_segment_detect = _lcmap_detect(10)
+q_lcmap_detect_chip = _lcmap_detect(100)
 
 
 def _sql_segment_detect(side: int = 10, n_acq: int = 40) -> str:
@@ -92,172 +95,50 @@ FROM fit3
 """
 
 
-def q_lcmap_prediction(spark, sf_dir):
-    """UD2+UD3: train (fallback classifier) then batch-predict with
-    defaults routing — the full /prediction composition at probe
-    scale (side=8; the bench-scale twin is ``lcmap_predict_chip``).
-    FULLY ORACLE-CHECKED since round 11: the md5-hash fixtures
-    regenerate in SQL and the compared columns (keys, segment dates,
-    exploded prediction dates, prob arity) are closed-form
-    (_sql_predict_chip(side=8)); the tile_pipeline fit — including
-    its seeded sample/split, which only shape the MODEL, never the
-    compared columns — still runs as the workload."""
-    from .plans.prediction import prediction_pipeline
-    from .plans.tile import tile_pipeline
+# the hash fixtures' chip and training date; the sampling budget of one chip
+_CHIP, _DATE = (-2061585, 1922805), "2001-07-01"
+_CHIP_BUDGET = dict(target_samples=20_000, class_min=50, class_max=4_000)
+
+
+def _hash_chip(spark, side: int):
     from .sources.fixtures import synth_aux_hash, synth_segments_hash
-    segs = synth_segments_hash(spark, side=8)
-    aux = synth_aux_hash(spark, side=8)
-    model, _ = tile_pipeline(segs, aux, "2001-07-01", target_samples=200,
-                             class_min=5, class_max=40)
-    preds = prediction_pipeline(segs, aux, model, 7, 1)
-    return preds.select("cx", "cy", "px", "py", "sday", "eday", "pday",
-                        F.size("prob").alias("n_probs"))
-
-
-def q_lcmap_detect_chip(spark, sf_dir):
-    """BENCH-SCALE /segment: one FULL 100×100-pixel chip — the
-    reference's unit of work (blackmagic/blueprints/segment.py:253-264
-    runs detection chip-at-a-time) — through the same assembly →
-    per-pixel detect → 38-col projection as ``lcmap_segment_detect``.
-    Fully oracle-checked at this scale too: the md5-hash chip and the
-    closed-form integer-sum OLS detector regenerate bit-for-bit in
-    DuckDB (_sql_segment_detect(side=100)).  This is the engine's
-    published number for the reference's detect path; BASELINE.md's
-    only anchor (~970 s/chip, prediction.py:203-207) is the companion
-    prediction path benched by ``lcmap_predict_chip``."""
-    from .plans.segment import segment_pipeline
-    from .sources.fixtures import synth_ard_hash
-    ard = synth_ard_hash(spark, side=100)
-    return segment_pipeline(ard, side=100).select(
-        "cx", "cy", "px", "py", "sday", "eday", "curqa",
-        F.col("recoef")[0].alias("reslope"), "reint", "rermse")
+    return (synth_segments_hash(spark, side=side),
+            synth_aux_hash(spark, side=side))
 
 
 def q_lcmap_tile_train(spark, sf_dir):
-    """BENCH-SCALE /tile training prep (blackmagic/blueprints/
-    tile.py:391-404): training-data assembly → label statistics →
-    stratified sample → holdout split → model fit over one full
-    100×100 chip's segments + aux.  The call itself runs the fit
-    (UD2, fallback trainer when xgboost is absent); the returned
-    DataFrame is the per-label statistics plus the sampled split
-    sizes — the verifiable summary a training job reports.
-
-    FULLY ORACLE-CHECKED (round 11): the fixtures are the md5-hash
-    twins (synth_segments_hash / synth_aux_hash — regenerable in
-    SQL), sampling orders by an md5 column (the stratified_sample
-    order_col determinism contract) and the holdout coin is
-    train_test_split_hash, so every count in the output is a closed
-    -form function DuckDB reproduces (_sql_tile_train)."""
-    from .ml.train import train_model
-    from .operators.sampling import (stratified_sample,
-                                     train_test_split_hash)
-    from .operators.stats import label_statistics
-    from .plans.training import training_data
-    from .sources.fixtures import synth_aux_hash, synth_segments_hash
-    segs = synth_segments_hash(spark, side=100)
-    aux = synth_aux_hash(spark, side=100)
-    # tile_pipeline's stages, shared instead of recomputed: assembly →
-    # stats → sample → split → fit (plans/tile.py:tile_pipeline
-    # verbatim; inlined so the summary below reuses the same frames)
-    # localCheckpoint: FOUR downstream consumers share the assembled
-    # matrix (stats, the sample, the fit's collect, the split counts) —
-    # without it Catalyst re-runs the segments⨝aux assembly per
-    # consumer.  ~20k rows × 69 features: sample-sized, not tile-sized.
-    # Lazy (r15): the fit's matrix collect is the first action and
-    # materializes it in the same job; the returned stats/split
-    # aggregates then read blocks under the caller's action.
-    ordc = F.conv(F.substring(F.md5(F.concat_ws(
-        ":", F.lit("ord"), F.col("px").cast("string"),
-        F.col("py").cast("string"))), 1, 12), 16, 10).cast("bigint")
-    data = (training_data(segs, aux, "2001-07-01", keep_keys=True)
-            .withColumn("__ord", ordc).localCheckpoint(eager=False))
-    stats = label_statistics(data, "label")
-    sample = stratified_sample(data, "label", 20_000, 50, 4_000,
-                               order_col="__ord")
-    train, test = train_test_split_hash(sample, ["px", "py"], 0.2)
-    train_model(train.select("label", "features"),
-                test.select("label", "features"))  # UD2: the fit
-    splits = (train.agg(F.lit("train").alias("split"),
-                        F.count(F.lit(1)).alias("n"))
-              .unionByName(test.agg(F.lit("test").alias("split"),
-                                    F.count(F.lit(1)).alias("n"))))
-    return (stats.select(F.concat(F.lit("label:"),
-                                  F.col("label").cast("string"))
-                         .alias("split"),
-                         F.col("cnt").alias("n"))
-            .unionByName(splits).orderBy("split"))
+    """/tile over one 100×100 hash chip: the label counts and split
+    sizes of plans.tile.tile_pipeline's fit (_sql_tile_train)."""
+    from .plans.tile import tile_pipeline
+    segs, aux = _hash_chip(spark, 100)
+    _, stats, train, test = tile_pipeline(segs, aux, _DATE, chips=[_CHIP],
+                                          **_CHIP_BUDGET)
+    label = F.concat(F.lit("label:"), F.col("label").cast("string"))
+    out = stats.select(label.alias("split"), F.col("cnt").alias("n"))
+    for name, split in (("train", train), ("test", test)):
+        out = out.unionByName(split.agg(F.lit(name).alias("split"),
+                                        F.count(F.lit(1)).alias("n")))
+    return out.orderBy("split")
 
 
-def q_lcmap_predict_chip(spark, sf_dir):
-    """BENCH-SCALE /prediction: train-then-predict over one FULL
-    100×100 chip — the exact workload behind BASELINE.md's only
-    published number (~970 s/chip for the superseded per-row loop,
-    blackmagic/blueprints/prediction.py:203-207; the batch path this
-    engine implements is prediction.py:331-345).  Broadcast model +
-    Arrow-batched mapInPandas inference; defaults routed around the
-    model exactly as ``lcmap_prediction`` does at probe scale.
+def _lcmap_predict(side: int, budget: dict):
+    """/tile then /prediction over one hash chip, calling plans.* as
+    api.run_tile_job and run_prediction_job do; the compared columns
+    are closed-form (_sql_predict_chip(side))."""
+    def q(spark, sf_dir):
+        from .plans.prediction import prediction_pipeline
+        from .plans.tile import tile_pipeline
+        segs, aux = _hash_chip(spark, side)
+        model, *_ = tile_pipeline(segs, aux, _DATE, chips=[_CHIP], **budget)
+        preds = prediction_pipeline(segs, aux, model, 7, 1)
+        return preds.select("cx", "cy", "px", "py", "sday", "eday", "pday",
+                            F.size("prob").alias("n_probs"))
+    return q
 
-    FULLY ORACLE-CHECKED (round 11): md5-hash fixtures + the
-    deterministic sample/split; the compared columns (keys, segment
-    dates, exploded prediction dates, and the prob-vector arity —
-    NUM_CLASSES for modeled rows, 0 for default segments) are
-    closed-form in DuckDB (_sql_predict_chip).  The fit and the
-    mapInPandas inference still RUN — their probabilities are the
-    ML boundary the oracle deliberately does not hash."""
-    from .ml.train import train_model
-    from .operators.sampling import (stratified_sample,
-                                     train_test_split_hash)
-    from .plans.prediction import prediction_pipeline
-    from .plans.training import training_data
-    from .sources.fixtures import synth_aux_hash, synth_segments_hash
-    # localCheckpoint the fixture frames: BOTH the training assembly
-    # and prediction_inputs below consume segs+aux, and each
-    # checkpoint materialization re-ran the md5 fixture generation.
-    # ALL FOUR checkpoints here are LAZY since r15: this query's only
-    # unavoidable driver actions are the fit's matrix collect and the
-    # final inference job, and every checkpoint's first consumer sits
-    # under one of them — the fit's collect materializes segs, aux
-    # and data in ONE job; the final job materializes inputs.  The
-    # r14 eager forms ran four extra blocking jobs for the same reuse
-    # (driver bench 13.3 s, scaling ratio 0.74 — action-bound).
-    segs = synth_segments_hash(spark, side=100) \
-        .localCheckpoint(eager=False)
-    aux = synth_aux_hash(spark, side=100).localCheckpoint(eager=False)
-    # tile_pipeline's fit stages with the training matrix checkpointed
-    # once (sample + the fit's collect re-ran the assembly)
-    ordc = F.conv(F.substring(F.md5(F.concat_ws(
-        ":", F.lit("ord"), F.col("px").cast("string"),
-        F.col("py").cast("string"))), 1, 12), 16, 10).cast("bigint")
-    data = (training_data(segs, aux, "2001-07-01", keep_keys=True)
-            .withColumn("__ord", ordc).localCheckpoint(eager=False))
-    sample = stratified_sample(data, "label", 20_000, 50, 4_000,
-                               order_col="__ord")
-    train, test = train_test_split_hash(sample, ["px", "py"], 0.2)
-    model = train_model(train.select("label", "features"),
-                        test.select("label", "features"))
-    # prediction_pipeline's stages, inlined (the tile_train precedent)
-    # to cut the final job's contention surface: the defaults/data
-    # union otherwise re-runs the fixture assembly + feature build in
-    # BOTH branches (a 64-task stage), and the modeled branch spawns
-    # one Python worker per upstream partition for a ~20 MB matrix.
-    # Checkpointing the assembled inputs once and coalescing the
-    # Arrow side to 8 partitions keeps the inference stage at 8
-    # Python tasks over staged rows — the shape that stayed flat
-    # under driver-suite load (r12's 5.9→14 s swing; SCALE.md r13).
-    # Chip-scale only: the real tile path (prediction_pipeline) keeps
-    # full parallelism — there the matrix is tile-sized, not 20 MB.
-    from .ml.predict import predict_probabilities
-    from .operators.unions import default_predictions, group_data
-    from .plans.prediction import prediction_inputs
-    inputs = prediction_inputs(segs, aux, 7, 1) \
-        .localCheckpoint(eager=False)
-    defaults, data = group_data(inputs)
-    predicted = (predict_probabilities(data.coalesce(8), model,
-                                       "independent")
-                 .drop("independent"))
-    preds = default_predictions(defaults.drop("independent"), predicted)
-    return preds.select("cx", "cy", "px", "py", "sday", "eday", "pday",
-                        F.size("prob").alias("n_probs"))
+
+q_lcmap_prediction = _lcmap_predict(
+    8, dict(target_samples=200, class_min=5, class_max=40))
+q_lcmap_predict_chip = _lcmap_predict(100, _CHIP_BUDGET)
 
 
 def _h8sql(key: str) -> str:

@@ -125,6 +125,22 @@ def test_tile_then_prediction_jobs(spark, tmp_path):
     assert health() == {"status": 200}
 
 
+def test_tile_job_reads_segment_sink(spark, tmp_path):
+    """/segment then /tile on the segment sink read back through
+    storage.read, which infers the cx/cy partition columns as INT."""
+    from lcmap_blackmagic_spark.api import run_tile_job
+    from lcmap_blackmagic_spark.sources.fixtures import synth_aux
+    root = str(tmp_path / "store")
+    assert run_segment_job(spark, GOOD_SEG, root, side=5)["status"] == 200
+    tp = {"tx": 0, "ty": 300, "acquired": "1980/2019",
+          "date": "2001-07-01", "chips": [(100, 200)]}
+    r = run_tile_job(spark, tp, root,
+                     segments=storage.read(spark, root, "segment"),
+                     aux=synth_aux(spark, cx=100, cy=200, side=5))
+    assert r["status"] == 200, r.get("message")
+    assert storage.read(spark, root, "tile").count() == 1
+
+
 def test_prediction_job_without_model_500(spark, tmp_path):
     from lcmap_blackmagic_spark.api import run_prediction_job
     root = str(tmp_path / "empty")

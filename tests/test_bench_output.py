@@ -31,7 +31,7 @@ def _headline():
 
 
 def _compact(v):
-    if not isinstance(v, float):
+    if not isinstance(v, (int, float)):
         return "ERR"
     r = round(v, 1)
     return int(r) if r == int(r) else r
@@ -69,11 +69,14 @@ def test_integral_medians_print_as_ints():
     assert _compact(11.0) == 11 and isinstance(_compact(11.0), int)
     assert _compact(11.04) == 11 and isinstance(_compact(11.04), int)
     assert _compact(1.25) == 1.2           # bankers' via round()
+    assert _compact(7) == 7 and isinstance(_compact(7), int)
+    assert _compact({"err": "boom"}) == "ERR"
     assert _compact("boom") == "ERR"
     import os
     src = open(os.path.join(os.path.dirname(__file__), "..",
                             "bench.py")).read()
     assert "return int(r) if r == int(r) else r" in src
+    assert "if not isinstance(v, (int, float)):" in src
     assert '"value": round(total, 1),' in src
     # anchor_sec appears in the DETAIL dict, never in the compact out
     compact = src[src.index('out = {'):src.index('if failed:')]

@@ -133,14 +133,39 @@ def test_training_data_last_wins_dedupe(spark):
 
 @pytest.fixture(scope="module")
 def model(segments, aux):
-    model_bytes, stats = tile_pipeline(
+    model_bytes, *_ = tile_pipeline(
         segments, aux, "2001-07-01",
-        target_samples=200, class_min=5, class_max=40, seed=42)
+        target_samples=200, class_min=5, class_max=40)
     return model_bytes
 
 
 def test_tile_pipeline_trains(model):
     assert isinstance(model, bytes) and len(model) > 0
+
+
+def test_tile_pipeline_ignores_partitioning(segments, aux):
+    """The sample order and the holdout coin are md5 functions of the
+    rows, so the same inputs in 1, 3 or 7 partitions give the same
+    statistics, the same split and the same model. The caps bind, so
+    the sample order decides which rows are kept."""
+    import pickle
+
+    def run(n):
+        model, stats, train, test = tile_pipeline(
+            segments.repartition(n), aux.repartition(n), "2001-07-01",
+            target_samples=200, class_min=5, class_max=5)
+        return (pickle.loads(model),
+                *(sorted(map(tuple, f.collect()))
+                  for f in (stats, train, test)))
+
+    (m1, *frames1), *others = [run(n) for n in (1, 3, 7)]
+    stats, train, test = frames1
+    assert len(train) + len(test) < sum(r[1] for r in stats)  # caps bind
+    for m, *frames in others:
+        assert frames == frames1
+        assert (m["seen"] == m1["seen"]).all()
+        np.testing.assert_allclose(m["centroids"], m1["centroids"],
+                                   rtol=0, atol=1e-9)
 
 
 def test_prediction_inputs_explode(segments, aux):
@@ -167,9 +192,9 @@ def test_tile_predict_spark_ml_e2e(segments, aux):
 
     from lcmap_blackmagic_spark.ml.train import evaluate
 
-    model_bytes, _ = tile_pipeline(
+    model_bytes, *_ = tile_pipeline(
         segments, aux, "2001-07-01",
-        target_samples=200, class_min=5, class_max=40, seed=42,
+        target_samples=200, class_min=5, class_max=40,
         trainer="spark_ml")
     assert pickle.loads(model_bytes)["kind"] == "logreg"
     preds = prediction_pipeline(segments, aux, model_bytes, 7, 1)

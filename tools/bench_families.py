@@ -59,13 +59,27 @@ def summarize(detail: dict) -> dict:
     for q, sec in sorted(detail["queries"].items()):
         f = family_of(q)
         fams[f]["queries"].append(q)
-        fams[f]["total_sec"] = round(fams[f]["total_sec"] + sec, 3)
+        if isinstance(sec, (int, float)):       # an error dict has no time
+            fams[f]["total_sec"] = round(fams[f]["total_sec"] + sec, 3)
     for f, rec in fams.items():
         anchor = detail.get(FAMILY_ANCHOR[f])
         rec["anchor"] = anchor
         rec["normalized"] = (round(rec["total_sec"] / anchor, 2)
                              if anchor else None)
     return fams
+
+
+def families(cur: dict, prev: dict | None = None) -> dict:
+    """The BENCH_FAMILIES.json document for detail ``cur``, with the
+    per-family ratios against ``prev`` when given."""
+    out = {"sf": cur.get("sf"), "families": summarize(cur)}
+    if prev:
+        pf = summarize(prev)
+        out["vs_prev"] = {}
+        for f, rec in out["families"].items():
+            a, b = rec.get("normalized"), pf[f].get("normalized")
+            out["vs_prev"][f] = round(a / b, 3) if a and b else None
+    return out
 
 
 def main() -> None:
@@ -76,15 +90,11 @@ def main() -> None:
         os.path.join(REPO, "BENCH_FAMILIES.json")
     with open(cur_p) as fh:
         cur = json.load(fh)
-    out = {"sf": cur.get("sf"), "families": summarize(cur)}
+    prev = None
     if prev_p:
         with open(prev_p) as fh:
             prev = json.load(fh)
-        pf = summarize(prev)
-        out["vs_prev"] = {}
-        for f, rec in out["families"].items():
-            a, b = rec.get("normalized"), pf[f].get("normalized")
-            out["vs_prev"][f] = round(a / b, 3) if a and b else None
+    out = families(cur, prev)
     with open(out_p, "w") as fh:
         json.dump(out, fh, indent=1)
     print(json.dumps({f: {"total_sec": r["total_sec"],
