@@ -8,16 +8,18 @@ raise_on / exception_handler decorators at __init__.py:33-68; the
 test contract at test_A_segment.py:159-194).
 
 Here a "request" is a job: validation raises ``ValidationError``
-(→ 400), stages run in order and wrap failures in ``StageError``
-(→ 500, stage named). No-partial-writes holds structurally: every
-stage before ``save`` only BUILDS a lazy plan, and each entity write
-in the save stage is one dynamic-partition-overwrite job that Spark
-commits atomically via the output committer. A save stage touching
-several entities is per-entity atomic + idempotent-on-retry (the
-same partitions are rewritten), with side entities committed before
-the authoritative one so a mid-stage failure never publishes an
-authoritative partition whose side outputs are stale. The reference
-needed explicit deletes + ordered puts for the same guarantee.
+(→ 400), and each stage runs in a ``with stage(name)`` block that
+wraps its failure in ``StageError`` (→ 500, stage named) and skips
+the stages after it. No-partial-writes holds structurally: no stage
+before ``save`` writes anything (``nodata`` runs an action, but only
+reads), and each entity write in the save stage is one
+dynamic-partition-overwrite job that Spark commits atomically via
+the output committer. A save stage touching several entities is
+per-entity atomic + idempotent-on-retry (the same partitions are
+rewritten), with side entities committed before the authoritative
+one so a mid-stage failure never publishes an authoritative
+partition whose side outputs are stale. The reference needed
+explicit deletes + ordered puts for the same guarantee.
 
 ``test_exception`` reproduces the reference's fault-injection
 parameter (segment.py:151-153): name a stage to force it to raise.
@@ -25,9 +27,10 @@ parameter (segment.py:151-153): name a stage to force it to raise.
 
 from __future__ import annotations
 
+import datetime
 import re
-from collections.abc import Callable
-from typing import Any
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 RESPONSE_OK = 200
 RESPONSE_BAD_REQUEST = 400
@@ -97,7 +100,10 @@ def validate_tile_params(params: dict) -> dict:
         return out
     if not isinstance(chips, (list, tuple)) or not chips:
         raise ValidationError("parameter chips must be a non-empty list")
-    out["chips"] = [(int(x), int(y)) for x, y in chips]
+    try:
+        out["chips"] = [(int(x), int(y)) for x, y in chips]
+    except (TypeError, ValueError):
+        raise ValidationError("parameter chips must be a list of (cx, cy)")
     return out
 
 
@@ -107,29 +113,27 @@ def validate_prediction_params(params: dict) -> dict:
     out["acquired"] = _require_acquired(params)
     out["month"] = _require_int(params, "month")
     out["day"] = _require_int(params, "day")
-    if not 1 <= out["month"] <= 12:
-        raise ValidationError("month out of range")
-    if not 1 <= out["day"] <= 31:
-        raise ValidationError("day out of range")
+    try:
+        # a leap year, so that 2-29 is accepted
+        datetime.date(2000, out["month"], out["day"])
+    except ValueError:
+        raise ValidationError("month/day is not a calendar day")
     return out
 
 
-def run_stages(ctx: Any, stages: list[tuple[str, Callable[[Any], Any]]],
-               test_exception: str | None = None) -> Any:
-    """Execute stages in order, threading the context (the reference's
-    thread_first over a ctx dict — here usually a DataFrame or a small
-    state object). First failure wraps in StageError and aborts the
-    remaining stages, like skip_on_exception poisoning the ctx."""
-    for name, fn in stages:
-        if test_exception == name:
-            raise StageError(name, RuntimeError("test_exception"))
-        try:
-            ctx = fn(ctx)
-        except (ValidationError, StageError):
-            raise
-        except Exception as e:
-            raise StageError(name, e) from e
-    return ctx
+@contextmanager
+def stage(name: str, test_exception: str | None = None) -> Iterator[None]:
+    """One named stage of a job: a failure inside the block becomes
+    ``StageError(name)``, which skips the stages after it, like
+    skip_on_exception poisoning the reference's ctx."""
+    if test_exception == name:
+        raise StageError(name, RuntimeError("test_exception"))
+    try:
+        yield
+    except (ValidationError, StageError):
+        raise
+    except Exception as e:
+        raise StageError(name, e) from e
 
 
 def run_segment_job(spark, params: dict, storage_root: str,
@@ -141,72 +145,45 @@ def run_segment_job(spark, params: dict, storage_root: str,
     chip's synthetic fixture; pass a real scan in production.
     ``detector`` swaps the science core (default stub; pass
     ``plans.pyccd.pyccd_detector`` where lcmap-pyccd is installed)."""
-    from . import storage
-    from .plans.segment import (chip_record, detect, pixel_records,
-                                pixel_timeseries, stub_detector)
-    from .sources.fixtures import synth_ard
-
-    det = detector if detector is not None else stub_detector
-
-    p = validate_segment_params(params)
-
-    # UD4 telemetry: an Observation rides the detection plan and the
-    # save action populates it — per-job metrics with ZERO extra
-    # passes over the data (the Spark-native form of the reference's
-    # per-request log counters; cluster-level metrics stay with the
-    # Spark UI/listeners as documented in COVERAGE.md)
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
+
+    from . import storage
+    from .plans.segment import segment_pipeline, stub_detector
+    from .sources.fixtures import synth_ard
+
+    p = validate_segment_params(params)
+    # UD4 telemetry: the Observation rides the segment sink's frame, so
+    # the save action fills the per-job metrics with no extra pass
+    # (cluster-level metrics stay with the Spark UI, COVERAGE.md)
     obs = Observation("segment_metrics")
-
-    def load(ctx):
-        a = ard if ard is not None else synth_ard(
-            spark, cx=p["cx"], cy=p["cy"], side=side)
-        return {"ard": a}
-
-    def timeseries(ctx):
-        ctx["ts"] = pixel_timeseries(ctx["ard"], side=side)
-        return ctx
-
-    def nodata(ctx):
-        # P2: the reference 500s when merlin returns nothing
-        # (segment.py:178-184)
-        if ctx["ts"].isEmpty():
-            raise ValueError("no timeseries data")
-        return ctx
-
-    def detection(ctx):
-        ctx["detections"] = detect(ctx["ts"], detector=det).observe(
-            obs,
-            F.count(F.lit(1)).alias("n_detections"),
-            F.min("sday").alias("first_sday"),
-            F.max("eday").alias("last_eday"))
-        return ctx
-
-    def save(ctx):
-        # Each overwrite_partitions is atomic per entity; the stage as
-        # a whole is idempotent-on-retry (dynamic partition overwrite
-        # rewrites the same (cx, cy) partitions). Side entities (chip,
-        # pixel) commit FIRST so a mid-stage failure can never leave
-        # the authoritative segment partitions newer than their
-        # side outputs — a retry always converges.
-        storage.overwrite_partitions(chip_record(ctx["detections"]),
-                                     storage_root, "chip")
-        storage.overwrite_partitions(pixel_records(ctx["ts"]),
-                                     storage_root, "pixel")
-        storage.overwrite_partitions(ctx["detections"], storage_root,
-                                     "segment")
-        return ctx
-
     try:
-        run_stages(None, [("load", load), ("timeseries", timeseries),
-                          ("nodata", nodata), ("detection", detection),
-                          ("save", save)], test_exception)
+        with stage("load", test_exception):
+            if ard is None:
+                ard = synth_ard(spark, cx=p["cx"], cy=p["cy"], side=side)
+        with stage("timeseries", test_exception):
+            segments, chips, pixels = segment_pipeline(
+                ard, side, detector or stub_detector)
+        with stage("nodata", test_exception):
+            # P2: the reference 500s when merlin returns nothing
+            # (segment.py:178-184)
+            if pixels.isEmpty():
+                raise ValueError("no timeseries data")
+        with stage("detection", test_exception):
+            segments = segments.observe(
+                obs, F.count(F.lit(1)).alias("n_detections"),
+                F.min("sday").alias("first_sday"),
+                F.max("eday").alias("last_eday"))
+        with stage("save", test_exception):
+            # side entities (chip, pixel) commit FIRST, so a mid-stage
+            # failure never leaves the authoritative segment
+            # partitions newer than their side outputs
+            storage.overwrite_partitions(chips, storage_root, "chip")
+            storage.overwrite_partitions(pixels, storage_root, "pixel")
+            storage.overwrite_partitions(segments, storage_root, "segment")
     except StageError as e:
         return respond(p, e)
-    out = respond(p)
-    out["metrics"] = dict(obs.get)  # populated by the save action
-    return out
+    return respond(p) | {"metrics": dict(obs.get)}
 
 
 def run_tile_job(spark, params: dict, storage_root: str,
@@ -218,42 +195,31 @@ def run_tile_job(spark, params: dict, storage_root: str,
     stats → stratified sample → split → fit → model sink (1-row tile
     record, hex model — ceph.py:137-148). Sampling budgets default to
     fixture scale; production passes the reference's 2e7/6e5/8e6."""
-    from pyspark.sql import functions as F
-
     from . import storage
     from .plans.tile import tile_pipeline
     from .sources.fixtures import synth_aux, synth_segments
 
     p = validate_tile_params(params)
-
-    def load(ctx):
-        cx, cy = p["chips"][0]
-        s = segments if segments is not None else synth_segments(
-            spark, cx=cx, cy=cy, side=8)
-        a = aux if aux is not None else synth_aux(
-            spark, cx=cx, cy=cy, side=8)
-        return {"segments": s, "aux": a}
-
-    def train(ctx):
-        ctx["model"], *_ = tile_pipeline(
-            ctx["segments"], ctx["aux"], p["date"], chips=p["chips"],
-            target_samples=target_samples, class_min=class_min,
-            class_max=class_max)
-        return ctx
-
-    def save(ctx):
-        row = spark.createDataFrame(
-            [(p["tx"], p["ty"], ctx["model"].hex())],
-            "tx long, ty long, model string")
-        storage.overwrite_partitions(row, storage_root, "tile")
-        return ctx
-
+    echo = p | {"chips": len(p["chips"])}
     try:
-        run_stages(None, [("load", load), ("train", train),
-                          ("save", save)], test_exception)
+        with stage("load", test_exception):
+            cx, cy = p["chips"][0]
+            if segments is None:
+                segments = synth_segments(spark, cx=cx, cy=cy, side=8)
+            if aux is None:
+                aux = synth_aux(spark, cx=cx, cy=cy, side=8)
+        with stage("train", test_exception):
+            model, *_ = tile_pipeline(
+                segments, aux, p["date"], chips=p["chips"],
+                target_samples=target_samples, class_min=class_min,
+                class_max=class_max)
+        with stage("save", test_exception):
+            row = spark.createDataFrame([(p["tx"], p["ty"], model.hex())],
+                                        "tx long, ty long, model string")
+            storage.overwrite_partitions(row, storage_root, "tile")
     except StageError as e:
-        return respond(p | {"chips": len(p["chips"])}, e)
-    return respond(p | {"chips": len(p["chips"])})
+        return respond(echo, e)
+    return respond(echo)
 
 
 def run_prediction_job(spark, params: dict, storage_root: str,
@@ -267,38 +233,25 @@ def run_prediction_job(spark, params: dict, storage_root: str,
     from .sources.fixtures import synth_aux, synth_segments
 
     p = validate_prediction_params(params)
-
-    def load_model(ctx):
-        row = (storage.read_partition(spark, storage_root, "tile",
-                                      tx=p["tx"], ty=p["ty"])
-               .select("model").first())
-        if row is None:
-            raise ValueError(f"no model for tile ({p['tx']}, {p['ty']})")
-        return {"model": bytes.fromhex(row["model"])}
-
-    def load_data(ctx):
-        ctx["segments"] = segments if segments is not None else \
-            synth_segments(spark, cx=p["cx"], cy=p["cy"], side=8)
-        ctx["aux"] = aux if aux is not None else \
-            synth_aux(spark, cx=p["cx"], cy=p["cy"], side=8)
-        return ctx
-
-    def predict(ctx):
-        ctx["preds"] = prediction_pipeline(
-            ctx["segments"], ctx["aux"], ctx["model"],
-            p["month"], p["day"])
-        return ctx
-
-    def save(ctx):
-        storage.overwrite_partitions(ctx["preds"], storage_root,
-                                     "prediction")
-        return ctx
-
     try:
-        run_stages(None, [("load_model", load_model),
-                          ("load_data", load_data),
-                          ("predict", predict), ("save", save)],
-                   test_exception)
+        with stage("load_model", test_exception):
+            row = (storage.read_partition(spark, storage_root, "tile",
+                                          tx=p["tx"], ty=p["ty"])
+                   .select("model").first())
+            if row is None:
+                raise ValueError(f"no model for tile ({p['tx']}, {p['ty']})")
+            model = bytes.fromhex(row["model"])
+        with stage("load_data", test_exception):
+            if segments is None:
+                segments = synth_segments(spark, cx=p["cx"], cy=p["cy"],
+                                          side=8)
+            if aux is None:
+                aux = synth_aux(spark, cx=p["cx"], cy=p["cy"], side=8)
+        with stage("predict", test_exception):
+            preds = prediction_pipeline(segments, aux, model,
+                                        p["month"], p["day"])
+        with stage("save", test_exception):
+            storage.overwrite_partitions(preds, storage_root, "prediction")
     except StageError as e:
         return respond(p, e)
     return respond(p)

@@ -11,9 +11,8 @@ Spark shape:
 - A2 assembly: posexplode of the chip raster → (pixel, acquisition)
   rows → pivot bands → one shuffle keyed (px, py), sorted arrays.
 - UD1 detection: ``mapInPandas`` over the assembly aggregate's
-  existing partitioning (see detect() — pixels are independent, so
-  Arrow batches replace the former salted grouping and its payload
-  shuffle) — the Pool boundary becomes the executor task boundary;
+  existing partitioning (see detect()) — the Pool boundary becomes
+  the executor task boundary;
   a single chip spreads across executors, a tile run is 2500 chips
   in one job.  Parallelism note for PLUGGABLE (slow, PyCCD-like)
   detectors: the stage width is the assembly's post-AQE partition
@@ -276,18 +275,15 @@ def detect(timeseries: DataFrame,
     whose detector returns no models yields one default segment
     (segment.py:52-53 defaults()).
 
-    No grouping at all (r14): pixels are independent and both
-    runners are row-wise, so the detector rides the assembly
-    aggregate's existing partitioning — the earlier salted
-    64-bucket applyInPandas (itself the fix for 10,000 singleton
-    groups) still paid one full shuffle of the assembled per-pixel
-    arrays, the fattest rows in the pipeline, purely to batch
-    pixels, which Arrow batching provides for free.  Parallelism is
-    the assembly's post-AQE partition count (the reference's
-    Pool-per-chip shape, segment.py:188-195, without its one-machine
-    cap).  The default stub detector runs a vectorized whole-batch
-    fast path (``_stub_batch_group``, bit-equal by oracle);
-    pluggable detectors run the row loop."""
+    No grouping: pixels are independent and both runners are
+    row-wise, so the detector rides the input's existing
+    partitioning and Arrow batches the pixels.  A grouping would
+    shuffle the assembled per-pixel arrays, the fattest rows in the
+    pipeline, for nothing.  Parallelism is the input's partition
+    count (the reference's Pool-per-chip shape, segment.py:188-195,
+    without its one-machine cap).  The default stub detector runs a
+    vectorized whole-batch fast path (``_stub_batch_group``,
+    bit-equal by oracle); pluggable detectors run the row loop."""
     if detector is stub_detector:
         run_group = _stub_batch_group
     else:
@@ -297,14 +293,6 @@ def detect(timeseries: DataFrame,
     from ..session import ensure_worker_imports
     ensure_worker_imports(timeseries.sparkSession)
 
-    # mapInPandas over the assembly's EXISTING partitioning (r14):
-    # pixels are independent and both runners are row-wise, so the
-    # detector needs no grouping at all — the former salted
-    # groupBy(cx, cy, __pg).applyInPandas paid one full extra shuffle
-    # of the assembled per-pixel arrays (the fattest rows in the
-    # pipeline) purely to batch pixels, which Arrow batching already
-    # does.  Output rows are identical (pinned A/B at side=100); the
-    # detect stage now starts where the assembly aggregate ended.
     def run_batches(batches):
         for pdf in batches:
             if len(pdf):
@@ -329,9 +317,14 @@ def pixel_records(timeseries: DataFrame) -> DataFrame:
 
 
 def segment_pipeline(ard: DataFrame, side: int = 100,
-                     detector: Callable = stub_detector) -> DataFrame:
-    """End-to-end /segment: assembly → detection. Returns the 38-col
-    segments DataFrame (callers persist via storage.overwrite_partitions
-    and derive chip/pixel records)."""
-    ts = pixel_timeseries(ard, side)
-    return detect(ts, detector)
+                     detector: Callable = stub_detector
+                     ) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """End-to-end /segment: assembly → detection → the three sink
+    frames ``(segments, chips, pixels)``, all lazy. The time series
+    feeds detection and the pixel records, the segments feed the
+    chip record and the segment sink, so each gets the one lazy
+    checkpoint of the reuse rule (plans/__init__.py) and detection
+    runs once per pixel."""
+    ts = pixel_timeseries(ard, side).localCheckpoint(eager=False)
+    segments = detect(ts, detector).localCheckpoint(eager=False)
+    return segments, chip_record(segments), pixel_records(ts)

@@ -26,7 +26,7 @@ def _lcmap_detect(side: int):
         from .plans.segment import segment_pipeline
         from .sources.fixtures import synth_ard_hash
         ard = synth_ard_hash(spark, side=side)
-        return segment_pipeline(ard, side=side).select(
+        return segment_pipeline(ard, side=side)[0].select(
             "cx", "cy", "px", "py", "sday", "eday", "curqa",
             F.col("recoef")[0].alias("reslope"), "reint", "rermse")
     return q

@@ -55,7 +55,7 @@ SLOW_SUITES = {
     "test_mix_budget_stream.py", "test_line_dedup_stream.py",
     # heavy table-format suites (changes/clone/constraints/bloom-
     # prune stay as the fast snapshot representatives)
-    "test_grid.py", "test_snapshot_checkpoint.py",
+    "test_snapshot_checkpoint.py",
     "test_snapshot_bloom.py", "test_zorder.py",
     "test_snapshot_merge.py", "test_snapshot_delete.py",
     # the full-registry oracle sweep at sf0.001 — redundant under

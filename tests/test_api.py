@@ -7,11 +7,11 @@ import pytest
 
 from lcmap_blackmagic_spark import storage
 from lcmap_blackmagic_spark.api import (StageError, ValidationError,
-                                        respond, run_segment_job,
-                                        run_stages,
+                                        respond, run_segment_job, stage,
                                         validate_prediction_params,
                                         validate_segment_params,
                                         validate_tile_params)
+from lcmap_blackmagic_spark.plans.segment import stub_detector
 
 GOOD_SEG = {"cx": 100, "cy": 200, "acquired": "1980/2019"}
 
@@ -42,6 +42,11 @@ def test_tile_params():
     with pytest.raises(ValidationError):
         validate_tile_params({"tx": 0, "ty": 0, "acquired": "1980/2019",
                               "date": "bad", "chips": [(0, 0)]})
+    # malformed chips entries are a 400, not a raw ValueError/TypeError
+    for chips in ([(0,)], [("a", 0)], [5]):
+        with pytest.raises(ValidationError):
+            validate_tile_params({"tx": 0, "ty": 0, "acquired": "1980/2019",
+                                  "date": "2001-07-01", "chips": chips})
 
 
 def test_prediction_params_range():
@@ -50,18 +55,36 @@ def test_prediction_params_range():
     assert validate_prediction_params(base)["month"] == 7
     with pytest.raises(ValidationError):
         validate_prediction_params(base | {"month": 13})
+    # a (month, day) no year has is a 400, not a 500 in 'save'
+    for month, day in ((4, 31), (2, 30), (0, 1), (1, 0), (1, 32)):
+        with pytest.raises(ValidationError):
+            validate_prediction_params(base | {"month": month, "day": day})
+    leap_day = validate_prediction_params(base | {"month": 2, "day": 29})
+    assert leap_day["day"] == 29
 
 
 # ---------------------------------------------------- stage errors --
 
-def test_run_stages_wraps_and_names_stage():
-    def boom(_):
-        raise RuntimeError("kaput")
+def test_stage_wraps_and_names_stage():
+    ran = []
     with pytest.raises(StageError) as ei:
-        run_stages({}, [("ok", lambda c: c), ("explode", boom),
-                        ("never", lambda c: c)])
+        with stage("ok"):
+            ran.append("ok")
+        with stage("explode"):
+            raise RuntimeError("kaput")
+        with stage("never"):
+            ran.append("never")
     assert ei.value.stage == "explode"
     assert ei.value.http_status == 500
+    assert ran == ["ok"]
+    # fault injection skips the body; a 400 passes through unwrapped
+    with pytest.raises(StageError) as ei:
+        with stage("load", test_exception="load"):
+            ran.append("load")
+    assert ei.value.stage == "load" and ran == ["ok"]
+    with pytest.raises(ValidationError):
+        with stage("load"):
+            raise ValidationError("bad")
 
 
 def test_respond_shapes():
@@ -73,9 +96,18 @@ def test_respond_shapes():
 
 # --------------------------------------- end-to-end + atomicity ----
 
-def test_segment_job_writes_all_entities(spark, tmp_path):
+@pytest.mark.parametrize("counted", [False, True],
+                         ids=["stub", "counting"])
+def test_segment_job_writes_all_entities(spark, tmp_path, counted):
+    calls = spark.sparkContext.accumulator(0)
+
+    def counting_detector(dates, bands, qas):
+        calls.add(1)
+        return stub_detector(dates, bands, qas)
+
     root = str(tmp_path / "store")
-    r = run_segment_job(spark, GOOD_SEG, root, side=5)
+    r = run_segment_job(spark, GOOD_SEG, root, side=5,
+                        detector=counting_detector if counted else None)
     assert r["status"] == 200
     assert storage.read(spark, root, "segment").count() == 25
     assert storage.read(spark, root, "pixel").count() == 25
@@ -84,6 +116,10 @@ def test_segment_job_writes_all_entities(spark, tmp_path):
     # save action itself, no extra pass over the data
     assert r["metrics"]["n_detections"] == 25
     assert r["metrics"]["first_sday"] <= r["metrics"]["last_eday"]
+    if counted:
+        # the time series and the segments are each computed once, so
+        # detection runs once per pixel
+        assert calls.value == 25
 
 
 @pytest.mark.parametrize("stage", ["timeseries", "detection", "save"])

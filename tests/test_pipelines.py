@@ -11,8 +11,7 @@ from pyspark.sql import functions as F
 from lcmap_blackmagic_spark.ml.train import train_model
 from lcmap_blackmagic_spark.plans.prediction import (prediction_inputs,
                                                      prediction_pipeline)
-from lcmap_blackmagic_spark.plans.segment import (pixel_records,
-                                                  pixel_timeseries,
+from lcmap_blackmagic_spark.plans.segment import (pixel_timeseries,
                                                   segment_pipeline)
 from lcmap_blackmagic_spark.plans.tile import tile_pipeline
 from lcmap_blackmagic_spark.plans.training import training_data
@@ -54,7 +53,7 @@ def test_pixel_timeseries_assembly(ard):
 
 
 def test_segment_pipeline_counts_and_schema(ard):
-    segs = segment_pipeline(ard, side=SIDE)
+    segs, chips, _ = segment_pipeline(ard, side=SIDE)
     assert segs.schema == SEGMENTS
     rows = segs.collect()
     # stub detector: 1 segment per pixel (default or fitted)
@@ -63,12 +62,13 @@ def test_segment_pipeline_counts_and_schema(ard):
     assert len(fitted) > 0.8 * SIDE * SIDE  # ~15% cloud → most pixels fit
     # fitted segments carry 7 coefficients with the linear slope first
     assert all(len(r["blcoef"]) == 7 for r in fitted)
+    assert chips.count() == 1
 
 
 def test_segment_pipeline_default_sentinels(ard):
     # force everything to default by requiring impossible clear count
-    segs = segment_pipeline(ard, side=SIDE,
-                            detector=lambda d, b, q: [])
+    segs, _, _ = segment_pipeline(ard, side=SIDE,
+                                  detector=lambda d, b, q: [])
     rows = segs.collect()
     assert len(rows) == SIDE * SIDE
     assert all(r["sday"] == r["eday"] == r["bday"] == DEFAULT_DAY
@@ -77,8 +77,8 @@ def test_segment_pipeline_default_sentinels(ard):
 
 
 def test_pixel_records_mask(ard):
-    ts = pixel_timeseries(ard, side=SIDE)
-    pr = pixel_records(ts).collect()
+    _, _, pixels = segment_pipeline(ard, side=SIDE)
+    pr = pixels.collect()
     assert len(pr) == SIDE * SIDE
     assert set(v for r in pr for v in r["mask"]) <= {0, 1}
 

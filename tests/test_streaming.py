@@ -447,7 +447,9 @@ def test_chipmunk_stream_drives_detection(spark, tmp_path):
     def process(batch_df, batch_id):
         if batch_df.isEmpty():
             return
-        segs = segment_pipeline(batch_df, side=side)
+        segs, chips, pixels = segment_pipeline(batch_df, side=side)
+        storage.overwrite_partitions(chips, root, "chip")
+        storage.overwrite_partitions(pixels, root, "pixel")
         storage.overwrite_partitions(segs, root, "segment")
 
     q = (stream.writeStream.foreachBatch(process)
@@ -470,6 +472,8 @@ def test_chipmunk_stream_drives_detection(spark, tmp_path):
     # one segment row per pixel per chip (default segments included,
     # so the count holds even when a pixel has < 12 clear obs)
     assert seg.count() == 2 * side * side
+    assert storage.read(spark, root, "pixel").count() == 2 * side * side
+    assert storage.read(spark, root, "chip").count() == 2
     assert sorted(r["cx"] for r in
                   seg.select("cx").distinct().collect()) == [-2061585,
                                                              -2058585]
