@@ -3,16 +3,17 @@ at-scale decontamination/blocklist shape shared by the batch query
 (registry_ext16.q_llm_bloom_decontam) and the streaming ingest twin
 (streaming.jobs.bloom_decontam_stream):
 
-- the reference set's grams fold into an m-bit bitset via bit_or
-  word partials (executor-side; the driver collects m/64 bigints),
+- the reference set's grams fold into an m-bit bitset
+  (operators/bloom.py — executor-side word fold, the driver collects
+  m/64 words),
 - the bitset persists as a tiny (w, bits) table — the streaming
   jobs' signature store — and broadcasts to every worker,
-- each probe gram tests k deterministic md5 positions in one
-  Arrow-vectorized numpy pass per batch.
+- each probe gram tests its k md5 positions in one Arrow-vectorized
+  numpy pass per batch.
 
-Positions are md5-derived (the storage._bloom_positions
-construction), so the membership decision — false positives
-included — is a pure function any engine replays exactly.
+The positions are operators.bloom's, so the membership decision —
+false positives included — is a pure function any engine replays
+exactly.
 """
 
 from __future__ import annotations
@@ -22,52 +23,30 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators import bloom
+
 BLOOM_M = 1 << 17         # bits; 2048 packed words — broadcastable
-BLOOM_K = 7
+BLOOM_K = bloom.K
 DECON_N = 5               # word n-gram order (llm_decontaminate's)
 
 
-def gram_positions(gram_col, m: int = BLOOM_M, k: int = BLOOM_K):
-    """The k md5-derived bit positions of a gram (48-bit prefix
-    mod m)."""
-    return F.array(*[
-        (F.conv(F.substring(F.md5(F.concat(F.lit(f"{i}:"), gram_col)),
-                            1, 12), 16, 10).cast("bigint")
-         % F.lit(m)).cast("long")
-        for i in range(k)])
+def bits_from_words(rows, m: int = BLOOM_M) -> bytes:
+    """A persisted (w, bits) word table's rows -> the packed bitset."""
+    return bloom.pack(rows, m)
 
 
-def bloom_words(grams: DataFrame, m: int = BLOOM_M,
-                k: int = BLOOM_K) -> DataFrame:
-    """Fold a gram column (named ``g``) into non-zero bitset words
-    (w, bits) — one bit_or aggregate, at most m/64 output rows."""
-    return (grams
-            .select(F.explode(gram_positions(F.col("g"), m, k))
-                    .alias("pos"))
-            .groupBy(F.shiftright(F.col("pos"), 6).alias("w"))
-            .agg(F.bit_or(F.expr(
-                "shiftleft(CAST(1 AS BIGINT), pos % 64)")).alias("bits")))
-
-
-def bits_from_words(rows, m: int = BLOOM_M) -> np.ndarray:
-    """(w, bits) rows -> packed uint64 bitset array."""
-    bits = np.zeros(m // 64, dtype=np.uint64)
-    for row in rows:
-        bits[row["w"]] = np.uint64(row["bits"] & 0xFFFFFFFFFFFFFFFF)
-    return bits
-
-
-def bloom_hit_udf(spark, bits: np.ndarray):
+def bloom_hit_udf(spark, bits: bytes):
     """Arrow-vectorized membership probe over a positions-array
     column: True iff every position's bit is set in the broadcast
-    bitset."""
+    bitset (operators.bloom's little-endian packing, read as 64-bit
+    words)."""
     from pyspark.sql.pandas.functions import pandas_udf
 
     bbits = spark.sparkContext.broadcast(bits)
 
     @pandas_udf("boolean")
     def bloom_hit(pos: pd.Series) -> pd.Series:
-        bs = bbits.value
+        bs = np.frombuffer(bbits.value, dtype="<u8")
         arr = np.asarray([np.asarray(p, dtype=np.int64) for p in pos])
         if arr.size == 0:
             return pd.Series(np.zeros(len(pos), dtype=bool))
@@ -78,7 +57,7 @@ def bloom_hit_udf(spark, bits: np.ndarray):
     return bloom_hit
 
 
-def doc_hit_flags(docs: DataFrame, bits: np.ndarray,
+def doc_hit_flags(docs: DataFrame, bits: bytes,
                   m: int = BLOOM_M, k: int = BLOOM_K,
                   n: int = DECON_N) -> DataFrame:
     """Per-doc contamination flag ``(doc_id, __hit)`` computed
@@ -96,12 +75,12 @@ def doc_hit_flags(docs: DataFrame, bits: np.ndarray,
     hit = bloom_hit_udf(spark, bits)
     grams = (docs.select("doc_id",
                          F.explode(shingles("text", n)).alias("g"))
-             .withColumn("pos", gram_positions(F.col("g"), m, k)))
+             .withColumn("pos", bloom.positions(F.col("g"), m, k)))
     return (grams.groupBy("doc_id")
             .agg(F.max(hit(F.col("pos"))).alias("__hit")))
 
 
-def contaminated_doc_ids(docs: DataFrame, bits: np.ndarray,
+def contaminated_doc_ids(docs: DataFrame, bits: bytes,
                          m: int = BLOOM_M, k: int = BLOOM_K,
                          n: int = DECON_N) -> DataFrame:
     """doc_ids whose text shares ANY word n-gram with the bloomed

@@ -13,8 +13,8 @@ correctness gate:
 - ``llm_bloom_decontam``: decontamination against a benchmark split
   through a BROADCAST BLOOM FILTER — the at-scale form of the
   5-gram semi-join (``llm_decontaminate``): the benchmark's grams
-  fold into an m-bit bitset (executor-side bit_or word partials, the
-  storage-layer bloom construction), the bitset broadcasts to every
+  fold into an m-bit bitset (operators/bloom.py, the filter the
+  storage sidecars use too), the bitset broadcasts to every
   worker (kilobytes, not the gram list), and each corpus gram tests
   k md5 positions in one Arrow-vectorized numpy pass.  Because the
   positions are deterministic md5, DuckDB replays the EXACT
@@ -23,9 +23,9 @@ correctness gate:
 
 Reference anchor: nothing in lcmap-blackmagic — the snapshot store
 and the LLM curation surface are the engine's own first-class
-additions (brief §LLM-ops); the bloom construction mirrors
-storage.write_with_bloom (file skipping) re-aimed at membership
-filtering.
+additions (brief §LLM-ops); the bloom filter is the one
+storage.write_with_bloom uses for file skipping, re-aimed at
+membership filtering.
 """
 
 from __future__ import annotations
@@ -112,8 +112,8 @@ def q_llm_bloom_decontam(spark, sf_dir):
 
     Scale shape (llm/bloomfilter.py, shared with the streaming twin
     bloom_decontam_stream): the benchmark grams never leave the
-    executors as a list — they fold into BLOOM_M bits via bit_or
-    word partials (the driver collects m/64 words once), and the
+    executors as a list — they fold into BLOOM_M bits executor-side
+    (operators/bloom.py; the driver collects m/64 words once), and the
     probe side tests each distinct (doc, gram)'s k positions against
     the BROADCAST bitset in one vectorized numpy pass per Arrow
     batch.  At 100 TB the bitset for a 10^9-gram benchmark is
@@ -121,15 +121,15 @@ def q_llm_bloom_decontam(spark, sf_dir):
     a multi-TB gram table — the standard production decontam trade
     (deterministic FPR instead of an exact join; the FPR is part of
     the checked semantics)."""
-    from .llm.bloomfilter import bits_from_words, bloom_words, \
-        doc_hit_flags
+    from .llm.bloomfilter import doc_hit_flags
     from .llm.dedup import shingles
+    from .operators import bloom
 
     d = _t(spark, sf_dir, "documents")
     bench = (d.filter(F.col("source") == "src0")
              .select(F.explode(shingles("text", DECON_N)).alias("g"))
              .distinct())
-    bits = bits_from_words(bloom_words(bench).collect())
+    bits = bloom.bitsets(bench, F.col("g"), BLOOM_M, BLOOM_K)
     corpus = d.filter(F.col("source") != "src0")
     # per-doc flag straight from the gram probe's aggregate, then an
     # UNFORCED left join back (AQE picks the strategy) — never a

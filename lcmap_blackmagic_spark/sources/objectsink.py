@@ -1,11 +1,12 @@
-"""Chip-object sink as a Spark 4 Python DataSource WRITER — the
-engine-integrated twin of ``storage.write_chip_json_objects``.
+"""The chip-object sink, as a Spark 4 Python DataSource WRITER.
 
 The reference persists one gzip JSON object per chip under
-``{entity}/{x}-{y}.json`` (ceph.py:306-351).  ``storage`` ships that
-as an ``applyInPandas`` job; this module exposes the same sink
-through Spark's sink API proper, so it composes with everything a
-DataFrame writer does::
+``{entity}/{x}-{y}.json`` (``_put_json`` + ``_{entity}_key``,
+ceph.py:306-351: the body is gzip of ``json.dumps(records)``, the key
+keeps the .json name with gzip as a transfer encoding).  This module
+is that sink, through Spark's sink API proper, so it composes with
+everything a DataFrame writer does (``write_objects`` below wraps
+it; ``storage.read_chip_json`` reads one object back)::
 
     spark.dataSource.register(ChipObjectsDataSource)
     (df.repartition("cx", "cy")
@@ -29,10 +30,10 @@ deletes only this job's temp files — previously committed objects
 are NEVER touched by a failed job (the first cut wrote finals
 directly and its abort destroyed prior commits).
 ``mode("overwrite")`` additionally removes committed objects absent
-from this job, so the directory equals the manifest.  Decompressed
-object PAYLOADS are identical to the storage-module sink (pinned by
-tests), and both sinks gzip with ``mtime=0`` so the raw bytes are
-deterministic across reruns too.
+from this job, so the directory equals the manifest.  Records are
+sorted by their serialized form and gzip runs with ``mtime=0``, so
+the raw object bytes are deterministic under shuffle and across
+reruns.
 
 One object per chip requires each chip's rows in ONE task — callers
 repartition by the chip key first (``write_objects`` below does);
@@ -47,6 +48,14 @@ from dataclasses import dataclass
 
 from pyspark.sql.datasource import (DataSource, DataSourceWriter,
                                     WriterCommitMessage)
+
+
+def _jsonable(v):
+    if hasattr(v, "tolist"):  # numpy array / scalar
+        return v.tolist()
+    if isinstance(v, (list, tuple)):
+        return [_jsonable(x) for x in v]
+    return v
 
 
 @dataclass
@@ -101,7 +110,7 @@ class _ObjectsWriter(DataSourceWriter):
         import json
         import os
 
-        from ..storage import PARTITION_KEYS, _jsonable
+        from ..storage import PARTITION_KEYS
         kx, ky = PARTITION_KEYS[self.entity]
         os.makedirs(os.path.join(self.root, self.entity),
                     exist_ok=True)
@@ -115,8 +124,8 @@ class _ObjectsWriter(DataSourceWriter):
             records = sorted(
                 ({c: _jsonable(v) for c, v in r.items()} for r in recs),
                 key=lambda r: json.dumps(r, sort_keys=True))
-            # mtime=0 → raw bytes deterministic (and identical to the
-            # storage-module sink, which pins the same flag)
+            # mtime=0: gzip otherwise stamps wall-clock time into the
+            # header, so raw object bytes would differ across reruns
             body = gzip.compress(json.dumps(records).encode("utf-8"),
                                  mtime=0)
             with open(self._tmp(x, y, attempt), "wb") as f:

@@ -21,6 +21,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .operators import bloom
+
 # entity → partition columns (mirrors the URL scheme ceph.py:17-49);
 # rollup_partial is the streaming-rollup partial store, partitioned by
 # micro-batch id so a replayed batch overwrites ITS OWN partition
@@ -76,76 +78,11 @@ def overwrite_partitions(df: DataFrame, root: str, entity: str) -> None:
        .parquet(path(root, entity)))
 
 
-def delete_partitions(spark: SparkSession, root: str, entity: str,
-                      **key_values) -> None:
-    """Explicit partition delete for parity with ceph.py:250-263 —
-    normally unnecessary (overwrite_partitions covers the idempotent
-    rewrite); provided for retention-style maintenance."""
-    import shutil
-    keys = PARTITION_KEYS[entity]
-    base = path(root, entity)
-    sub = os.path.join(base, *[f"{k}={key_values[k]}" for k in keys
-                               if k in key_values])
-    if os.path.exists(sub):
-        shutil.rmtree(sub)
-
-
 def write_json_gzip(df: DataFrame, out_dir: str) -> None:
     """Gzip JSON-lines sink (many part files). Kept for bulk interop —
     Parquet is the engine format; for the reference's exact object
-    layout use ``write_chip_json_objects``."""
+    layout use ``sources.objectsink.write_objects``."""
     df.write.mode("overwrite").option("compression", "gzip").json(out_dir)
-
-
-def _jsonable(v):
-    if hasattr(v, "tolist"):  # numpy array / scalar
-        return v.tolist()
-    if isinstance(v, (list, tuple)):
-        return [_jsonable(x) for x in v]
-    return v
-
-
-def write_chip_json_objects(df: DataFrame, root: str, entity: str) -> int:
-    """Byte-parity object sink: ONE gzip JSON object per chip (or
-    tile) under ``{entity}/{x}-{y}.json`` — the reference's Ceph key
-    scheme and encoding (``_put_json`` + ``_{entity}_key``,
-    ceph.py:306-351: body is gzip of ``json.dumps(records)``, key
-    keeps the .json name with gzip as a transfer encoding).
-
-    Executed as one distributed job: each (x, y) group serializes and
-    writes its own object from the executor — the same per-chip put
-    the reference does, minus the driver loop. Records are sorted by
-    their serialized form so object bytes are deterministic under
-    shuffle. Returns the number of objects written. In production the
-    local write becomes an object-store put with
-    ContentEncoding=gzip; the key scheme and bytes are identical."""
-    import gzip
-    import json
-
-    import pandas as pd
-
-    kx, ky = PARTITION_KEYS[entity]
-    out_base = os.path.join(root, entity)
-    os.makedirs(out_base, exist_ok=True)
-
-    def write_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        x, y = int(pdf[kx].iloc[0]), int(pdf[ky].iloc[0])
-        records = sorted(
-            ({c: _jsonable(v) for c, v in zip(pdf.columns, row)}
-             for row in pdf.itertuples(index=False, name=None)),
-            key=lambda r: json.dumps(r, sort_keys=True))
-        # mtime=0: gzip otherwise stamps wall-clock time into the
-        # header, so raw object bytes would differ across reruns
-        body = gzip.compress(json.dumps(records).encode("utf-8"),
-                             mtime=0)
-        path = os.path.join(out_base, f"{x}-{y}.json")
-        with open(path, "wb") as f:
-            f.write(body)
-        return pd.DataFrame({"x": [x], "y": [y], "n": [len(records)]})
-
-    acks = (df.groupBy(kx, ky)
-            .applyInPandas(write_group, schema="x long, y long, n long"))
-    return acks.count()
 
 
 def read_chip_json(root: str, entity: str, x: int, y: int) -> list[dict]:
@@ -232,19 +169,6 @@ def compact_partitions(spark: SparkSession, root: str,
 # ------------------------------------------ bloom file skipping ----
 
 BLOOM_SIDECAR = "_blooms.json"
-BLOOM_K = 7  # hash functions; with m = 10 bits/key, fpp ~ 0.8%
-
-
-def _bloom_positions(key: F.Column, m: int):
-    """The K deterministic bit positions of a key: independent
-    md5-derived 48-bit hashes mod m (engine-portable, no JVM-only
-    hash so a non-Spark writer could produce identical sidecars)."""
-    return F.array(*[
-        (F.conv(F.substring(F.md5(F.concat(F.lit(f"{i}:"),
-                                           key.cast("string"))),
-                            1, 12), 16, 10).cast("bigint")
-         % F.lit(m)).cast("int")
-        for i in range(BLOOM_K)])
 
 
 def write_with_bloom(df: DataFrame, out_dir: str, key_col: str,
@@ -262,11 +186,12 @@ def write_with_bloom(df: DataFrame, out_dir: str, key_col: str,
     positive rate of ~0.8% (k=7, 10 bits/key), the same file-skipping
     contract as Parquet's optional bloom_filter column metadata or
     Delta's BLOOMFILTER index, expressed engine-side so ANY layout
-    gets it. The bloom build is one distributed pass over the written
-    files with the bitset packed EXECUTOR-SIDE (positions fold into
-    64-bit words via bit_or partial aggregation), so the driver
-    collects exactly m/8 bytes per file — never the O(k·rows)
-    position stream. Returns the file count."""
+    gets it. The filters are ``operators.bloom.bitsets`` grouped by
+    file: one distributed pass over the written files, and the driver
+    collects m/8 bytes per file.  The sidecar records the key's
+    storage type, which the probe needs (``read_bloom_pruned``).
+    Returns the number of files with a filter: a file holding only
+    NULL keys gets none, as no equality probe can match it."""
     import base64
     import json
 
@@ -275,28 +200,13 @@ def write_with_bloom(df: DataFrame, out_dir: str, key_col: str,
     (df.repartition(n_files, F.col(key_col))
        .write.mode("overwrite").parquet(out_dir))
     m = max(64, int(bits_per_key * n_rows / n_files))
-    words = (spark.read.parquet(out_dir)
-             .select(F.input_file_name().alias("f"),
-                     F.explode(_bloom_positions(F.col(key_col), m))
-                     .alias("pos"))
-             .groupBy("f", F.shiftright(F.col("pos"), 6).alias("w"))
-             .agg(F.bit_or(F.expr(
-                 "shiftleft(CAST(1 AS BIGINT), pos % 64)")).alias("bits"))
-             .collect())
-    n_words = (m + 63) // 64
-    per_file: dict[str, list[int]] = {}
-    for row in words:
-        per_file.setdefault(os.path.basename(row["f"]),
-                            [0] * n_words)[row["w"]] = row["bits"]
-    blooms = {}
-    for name, ws in per_file.items():
-        bits = bytearray((m + 7) // 8)
-        for wi, word in enumerate(ws):
-            bits[wi * 8:wi * 8 + 8] = (word & 0xFFFFFFFFFFFFFFFF
-                                       ).to_bytes(8, "little")
-        blooms[name] = base64.b64encode(
-            bytes(bits[: (m + 7) // 8])).decode("ascii")
-    sidecar = {"key_col": key_col, "m": m, "k": BLOOM_K,
+    back = spark.read.parquet(out_dir)
+    per_file = bloom.bitsets(back, F.col(key_col), m,
+                             by=F.input_file_name())
+    blooms = {os.path.basename(f): base64.b64encode(bits).decode("ascii")
+              for f, bits in per_file.items()}
+    sidecar = {"key_col": key_col, "m": m, "k": bloom.K,
+               "type": back.schema[key_col].dataType.simpleString(),
                "files": blooms}
     with open(os.path.join(out_dir, BLOOM_SIDECAR), "w") as fh:
         json.dump(sidecar, fh)
@@ -309,23 +219,23 @@ def read_bloom_pruned(spark: SparkSession, out_dir: str,
     positions against each file's filter and scan ONLY the files
     that might contain it. Returns (df, files_read, files_total);
     the df still carries the exact equality filter — blooms only
-    skip, never answer. An empty candidate set returns an empty
+    skip, never answer. A probe whose rendering cannot be proven to
+    match the key column's (``operators.bloom.probe_string``: a
+    float, a cross-typed value, or a sidecar without a recorded
+    type) reads every file. An empty candidate set returns an empty
     DataFrame with the dataset's schema (driver-side planning cost
     is one tiny JSON, no file footers touched)."""
     import base64
-    import hashlib
     import json
 
     with open(os.path.join(out_dir, BLOOM_SIDECAR)) as fh:
         sc = json.load(fh)
     m, k, key_col = sc["m"], sc["k"], sc["key_col"]
-    positions = [int(hashlib.md5(f"{i}:{value}".encode())
-                     .hexdigest()[:12], 16) % m for i in range(k)]
-    keep = []
-    for name, b64 in sc["files"].items():
-        bits = base64.b64decode(b64)
-        if all(bits[p >> 3] & (1 << (p & 7)) for p in positions):
-            keep.append(os.path.join(out_dir, name))
+    probe = bloom.probe_string(value, sc.get("type"))
+    keep = [os.path.join(out_dir, name)
+            for name, b64 in sc["files"].items()
+            if probe is None
+            or bloom.may_contain(base64.b64decode(b64), m, probe, k)]
     total = len(sc["files"])
     if not keep:
         empty = spark.read.parquet(out_dir).limit(0)
@@ -748,14 +658,6 @@ SNAP_BLOOM = "_bloom.json"
 # gracefully to "never prunes", it never turns wrong.
 SNAP_BLOOM_MAX_BITS = 1 << 27
 
-# Spark storage types a probe Python value may prune against: the
-# write side hashes Spark's CAST(col AS STRING), which provably
-# equals Python's str() only when the probe's type matches the
-# column's storage family (an int probe against a double column
-# renders "107" vs the sidecar's "107.0" — the bloom would 'prove'
-# absence of a value that IS present).  Anything else → no prune.
-_SNAP_BLOOM_INT_TYPES = ("tinyint", "smallint", "int", "bigint")
-
 
 def _snap_commit_bloom(spark: SparkSession, data_dir: str,
                        cols: list[str],
@@ -766,9 +668,8 @@ def _snap_commit_bloom(spark: SparkSession, data_dir: str,
     useless for an id equality on a randomly-placed key (every dir's
     [min, max] spans the id space).  One filter per column over the
     whole dir, the ``write_with_bloom`` construction at dir
-    granularity: md5-derived positions (engine-portable), bitset
-    packed executor-side via bit_or word partials, the driver
-    collects m/8 bytes per column.  The sidecar lives INSIDE the
+    granularity (``operators.bloom.bitsets``): the driver collects
+    m/8 bytes per column.  The sidecar lives INSIDE the
     commit dir (a leading-underscore file — invisible to parquet
     scans), so it is immutable with the dir, rides through manifest
     carry-forward, and vanishes with vacuum; dirs written without one
@@ -787,27 +688,11 @@ def _snap_commit_bloom(spark: SparkSession, data_dir: str,
     types = {f.name: f.dataType.simpleString() for f in back.schema.fields}
     n_rows = back.count()
     m = max(64, min(int(bits_per_key * n_rows), SNAP_BLOOM_MAX_BITS))
-    n_words = (m + 63) // 64
     out = {}
     for col in cols:
-        words = (back.filter(F.col(col).isNotNull())
-                 .select(F.explode(_bloom_positions(F.col(col), m))
-                         .alias("pos"))
-                 .groupBy(F.shiftright(F.col("pos"), 6).alias("w"))
-                 .agg(F.bit_or(F.expr(
-                     "shiftleft(CAST(1 AS BIGINT), pos % 64)"))
-                     .alias("bits"))
-                 .collect())
-        ws = [0] * n_words
-        for row in words:
-            ws[row["w"]] = row["bits"]
-        bits = bytearray((m + 7) // 8)
-        for wi, word in enumerate(ws):
-            bits[wi * 8:wi * 8 + 8] = (word & 0xFFFFFFFFFFFFFFFF
-                                       ).to_bytes(8, "little")
-        out[col] = {"m": m, "k": BLOOM_K, "type": types.get(col),
-                    "bits": base64.b64encode(
-                        bytes(bits[:(m + 7) // 8])).decode("ascii")}
+        bits = bloom.bitsets(back, F.col(col), m)
+        out[col] = {"m": m, "k": bloom.K, "type": types.get(col),
+                    "bits": base64.b64encode(bits).decode("ascii")}
     with open(os.path.join(data_dir, SNAP_BLOOM), "w") as fh:
         json.dump(out, fh)
 
@@ -843,43 +728,18 @@ def _snap_bloom_may_match(table_dir: str, d: str, col: str,
     False ONLY when the sidecar proves the value absent.  Missing
     sidecar / untracked column / unprovable probe → True.
 
-    Pruning requires BOTH representations to provably agree: the
-    write side hashed Spark's CAST(col AS STRING), so the probe's
-    Python str() must match that rendering — which holds only when
-    the probe's type matches the column's recorded storage type
-    (int probe ↔ integral column, str ↔ string, bool ↔ boolean).
-    A cross-typed probe (e.g. int 107 against a double column
-    holding 107.0 — Spark renders "107.0") or a legacy sidecar with
-    no recorded type never prunes; the residual filter still runs,
-    so the answer stays right."""
-    import hashlib
-
+    Pruning requires BOTH representations to provably agree
+    (``operators.bloom.probe_string``): a cross-typed probe (e.g. int
+    107 against a double column holding 107.0) or a legacy sidecar
+    with no recorded type never prunes; the residual filter still
+    runs, so the answer stays right."""
     sc = _snap_bloom_load(table_dir, d, cache)
-    if sc is None:
-        return True
-    e = sc.get(col)
+    e = sc.get(col) if sc is not None else None
     if e is None:
         return True
-    ctype = e.get("type")
-    if isinstance(value, bool):
-        if ctype != "boolean":
-            return True
-        probe = "true" if value else "false"
-    elif isinstance(value, int):
-        if ctype not in _SNAP_BLOOM_INT_TYPES:
-            return True
-        probe = str(value)
-    elif isinstance(value, str):
-        if ctype != "string":
-            return True
-        probe = value
-    else:
-        return True
-    m, bits = e["m"], e["bits"]
-    positions = [int(hashlib.md5(f"{i}:{probe}".encode())
-                     .hexdigest()[:12], 16) % m
-                 for i in range(e["k"])]
-    return all(bits[pos >> 3] & (1 << (pos & 7)) for pos in positions)
+    probe = bloom.probe_string(value, e.get("type"))
+    return probe is None or bloom.may_contain(e["bits"], e["m"], probe,
+                                              e["k"])
 
 
 def _snap_commit_stats(spark: SparkSession, data_dir: str) -> dict:
@@ -907,6 +767,54 @@ def _snap_commit_stats(spark: SparkSession, data_dir: str) -> dict:
     return {c: [row[f"mn_{c}"], row[f"mx_{c}"]] for c in cols}
 
 
+def _snap_publish(table_dir: str, build) -> int | None:
+    """The one manifest commit every snapshot writer goes through —
+    the minimal table-format commit protocol (what Delta/Iceberg do
+    under their logs), expressed with one JSON file per version.
+
+    Each attempt re-reads the newest version and its manifest and
+    calls ``build(latest, prior)`` (``None, None`` on an empty table),
+    which returns the next manifest, returns None for a no-op, or
+    raises — so each writer's conflict policy lives in its own
+    ``build``, which also removes whatever it staged when it declines
+    or raises.  The manifest, stamped with its version and commit
+    ``ts``, is written COMPLETE to a temp file and published by
+    ``os.link``: the link is atomic AND exclusive, so two writers
+    racing to a version cannot both win, a reader can never observe a
+    partial manifest, and a crash mid-publish leaves no wedged empty
+    claim.  The loser (``FileExistsError``) calls ``build`` again
+    against the winner.  On an object store the link maps to a
+    put-if-absent of the full body.  Returns the published version,
+    or None when ``build`` declined."""
+    import json
+    import uuid
+
+    mdir = os.path.join(table_dir, SNAP_MANIFESTS)
+    os.makedirs(mdir, exist_ok=True)
+    while True:
+        latest = latest_version(table_dir)
+        prior = None
+        if latest is not None:
+            with open(os.path.join(mdir, f"v{latest}.json")) as fh:
+                prior = json.load(fh)
+        man = build(latest, prior)
+        if man is None:
+            return None
+        version = (latest or 0) + 1
+        man = {"version": version, **man, "ts": _commit_ts()}
+        tmp = os.path.join(mdir, f".tmp-{uuid.uuid4().hex[:12]}")
+        with open(tmp, "w") as fh:
+            json.dump(man, fh)
+        try:
+            os.link(tmp, os.path.join(mdir, f"v{version}.json"))
+        except FileExistsError:
+            continue        # lost the race: rebuild against the winner
+        finally:
+            os.remove(tmp)
+        _snap_maybe_checkpoint(table_dir, version)
+        return version
+
+
 def write_snapshot(df: DataFrame, table_dir: str,
                    mode: str = "overwrite",
                    tag: str | None = None,
@@ -914,37 +822,27 @@ def write_snapshot(df: DataFrame, table_dir: str,
                    collect_stats: bool = True,
                    bloom_cols: list[str] | None = None,
                    on_violation: str = "fail") -> int | None:
-    """Transactional snapshot write — the minimal table-format
-    commit protocol (what Delta/Iceberg do under their logs),
-    expressed with nothing but parquet + one JSON manifest:
-
-    1. data lands in an immutable, uniquely named commit directory
-       (never touching live files — readers of any version are
-       undisturbed),
-    2. the version manifest (the list of commit dirs that make up
-       the snapshot; prior dirs carried forward under ``append``,
-       plus the optional idempotency ``tag``) is written COMPLETE to
-       a temp file and published by ``os.link`` — the link is atomic
-       AND exclusive, so two writers racing to a version cannot both
-       win, a reader can never observe a partial manifest, and a
-       crash mid-publish leaves no wedged empty claim (the first-cut
-       ``open(x)`` + write had exactly that window).  The loser
-       re-reads the log and retries at the next version.
+    """Transactional snapshot write: the data lands in an immutable,
+    uniquely named commit directory (never touching live files —
+    readers of any version are undisturbed), then the version
+    manifest (the list of commit dirs that make up the snapshot;
+    prior dirs carried forward under ``append``, plus the optional
+    idempotency ``tag``) publishes through ``_snap_publish``.  A
+    writer that loses the publish race rebases onto the winner and
+    lands on the next version.
 
     Readers pin a version with ``read_snapshot(..., version=n)`` —
-    TIME TRAVEL over the unchanged old commit dirs.  On an object
-    store the link maps to a put-if-absent of the full body;
-    everything else is identical.  Returns the committed version.
+    TIME TRAVEL over the unchanged old commit dirs.  Returns the
+    committed version.
 
     ``dedupe_tag=True`` (used by ``write_snapshot_tagged``) re-checks
-    the tag INSIDE the retry loop: a writer that loses the os.link
-    race re-reads the log, and if the tag has meanwhile been
-    committed by the racing twin (a zombie driver replaying a
-    micro-batch alongside its successor), it aborts — deleting its
-    staged commit dir — and returns None instead of double-
-    publishing the batch.  A check only BEFORE staging would be
-    check-then-commit: the manifest link serializes version numbers,
-    not tags.
+    the tag on EVERY publish attempt: a writer that loses the race
+    re-reads the log, and if the tag has meanwhile been committed by
+    the racing twin (a zombie driver replaying a micro-batch
+    alongside its successor), it aborts — deleting its staged commit
+    dir — and returns None instead of double-publishing the batch.
+    A check only BEFORE staging would be check-then-commit: the
+    manifest link serializes version numbers, not tags.
 
     ``on_violation`` selects the CHECK-constraint policy when the
     table has registered constraints: ``fail`` (refuse the commit —
@@ -958,15 +856,14 @@ def write_snapshot(df: DataFrame, table_dir: str,
     filter proves the value absent — the id-lookup complement to the
     min/max stats, for high-cardinality columns the layout is not
     sorted by."""
-    import json
     import shutil
     import uuid
 
     if mode not in ("overwrite", "append"):
         raise ValueError(f"unknown snapshot mode {mode!r}")
     # replayed tag: no-op BEFORE validation so a quarantine-policy
-    # replay cannot re-append its dead rows to the DLQ (the in-loop
-    # re-check below still closes the concurrent-twin race)
+    # replay cannot re-append its dead rows to the DLQ (the per-
+    # attempt re-check below still closes the concurrent-twin race)
     if dedupe_tag and tag is not None \
             and tag in _committed_tags(table_dir):
         return None
@@ -980,47 +877,30 @@ def write_snapshot(df: DataFrame, table_dir: str,
              if collect_stats else {})
     if bloom_cols:
         _snap_commit_bloom(df.sparkSession, data_dir, bloom_cols)
-    mdir = os.path.join(table_dir, SNAP_MANIFESTS)
-    os.makedirs(mdir, exist_ok=True)
-    while True:
-        vs = _snap_versions(table_dir)
+
+    def build(latest, prior):
         if dedupe_tag and tag is not None \
                 and tag in _committed_tags(table_dir):
             shutil.rmtree(data_dir, ignore_errors=True)
             return None
-        version = (vs[-1] + 1) if vs else 1
-        dirs = [commit]
-        all_stats = {commit: stats}
-        seq = {commit: version}
-        deletes: list = []
-        if mode == "append" and vs:
+        man = {"mode": mode, "dirs": [commit], "stats": {commit: stats},
+               "seq": {commit: (latest or 0) + 1}}
+        if mode == "append" and prior is not None:
             # carry forward the prior dirs, their stats, their commit
             # sequence numbers, AND any outstanding equality-delete
-            # files — re-read inside the retry loop so a lost race
-            # appends onto whatever actually won
-            with open(os.path.join(mdir, f"v{vs[-1]}.json")) as fh:
-                prior = json.load(fh)
-            dirs = prior["dirs"] + dirs
-            all_stats = {**prior.get("stats", {}), **all_stats}
-            seq = {**prior.get("seq", {}), **seq}
-            deletes = _live_deletes(prior.get("deletes", []), dirs, seq)
-        man = {"version": version, "mode": mode, "dirs": dirs,
-               "stats": all_stats, "seq": seq, "ts": _commit_ts()}
-        if deletes:
-            man["deletes"] = deletes
+            # files of whatever version actually won
+            man["dirs"] = prior["dirs"] + man["dirs"]
+            man["stats"] = {**prior.get("stats", {}), **man["stats"]}
+            man["seq"] = {**prior.get("seq", {}), **man["seq"]}
+            deletes = _live_deletes(prior.get("deletes", []),
+                                    man["dirs"], man["seq"])
+            if deletes:
+                man["deletes"] = deletes
         if tag is not None:
             man["tag"] = tag
-        tmp = os.path.join(mdir, f".tmp-{uuid.uuid4().hex[:12]}")
-        with open(tmp, "w") as fh:
-            json.dump(man, fh)
-        try:
-            os.link(tmp, os.path.join(mdir, f"v{version}.json"))
-            _snap_maybe_checkpoint(table_dir, version)
-            return version
-        except FileExistsError:
-            continue        # lost the race: re-read the log, retry
-        finally:
-            os.remove(tmp)
+        return man
+
+    return _snap_publish(table_dir, build)
 
 
 # op -> (bounds test over [lo, hi], Column predicate) — ONE table
@@ -1325,7 +1205,7 @@ def write_snapshot_tagged(df: DataFrame, table_dir: str, tag: str,
     None when the tag was already committed.
 
     The tag check runs twice: here (fast path — skip staging
-    entirely) AND inside ``write_snapshot``'s publish-retry loop
+    entirely) AND on every ``write_snapshot`` publish attempt
     (``dedupe_tag=True``), which closes the check-then-commit window
     where two concurrent writers with the same tag both pass this
     precheck: the one that loses the manifest-link race re-reads the
@@ -1388,35 +1268,19 @@ def restore_snapshot(table_dir: str, version: int) -> int:
     vacuumed/absent (loud, like reading a vacuumed version).
     Returns the new version."""
     import json
-    import uuid
 
-    mdir = os.path.join(table_dir, SNAP_MANIFESTS)
-    src = os.path.join(mdir, f"v{version}.json")
+    src = os.path.join(table_dir, SNAP_MANIFESTS, f"v{version}.json")
     if not os.path.exists(src):
         raise ValueError(f"cannot restore {table_dir} to version "
                          f"{version}: manifest is vacuumed or absent")
     with open(src) as fh:
         old = json.load(fh)
-    while True:
-        vs = _snap_versions(table_dir)
-        new_v = (vs[-1] + 1) if vs else 1
-        man = {"version": new_v, "mode": "restore",
-               "dirs": old["dirs"], "stats": old.get("stats", {}),
-               "seq": old.get("seq", {}), "ts": _commit_ts(),
-               "restored_from": version}
-        if old.get("deletes"):
-            man["deletes"] = old["deletes"]
-        tmp = os.path.join(mdir, f".tmp-{uuid.uuid4().hex[:12]}")
-        with open(tmp, "w") as fh:
-            json.dump(man, fh)
-        try:
-            os.link(tmp, os.path.join(mdir, f"v{new_v}.json"))
-            _snap_maybe_checkpoint(table_dir, new_v)
-            return new_v
-        except FileExistsError:
-            continue        # lost the race: re-read the log, retry
-        finally:
-            os.remove(tmp)
+    man = {"mode": "restore", "dirs": old["dirs"],
+           "stats": old.get("stats", {}), "seq": old.get("seq", {}),
+           "restored_from": version}
+    if old.get("deletes"):
+        man["deletes"] = old["deletes"]
+    return _snap_publish(table_dir, lambda latest, prior: man)
 
 
 def clone_snapshot(src_dir: str, dst_dir: str,
@@ -1452,7 +1316,6 @@ def clone_snapshot(src_dir: str, dst_dir: str,
     materialize it and drop the dependency.  Returns the clone's
     version (always 1)."""
     import json
-    import uuid
 
     if version is None:
         version = latest_version(src_dir)
@@ -1468,33 +1331,24 @@ def clone_snapshot(src_dir: str, dst_dir: str,
         raise ValueError(
             "shallow clone requires a delete-free source version — "
             "run compact_snapshot on the source first")
-    if _snap_versions(dst_dir):
-        raise ValueError(f"clone target {dst_dir} already has "
-                         "snapshots")
     dst_data = os.path.join(dst_dir, "data")
     os.makedirs(dst_data, exist_ok=True)
     rel = os.path.relpath(os.path.join(src_dir, "data"), dst_data)
     dirs = [os.path.join(rel, d) for d in man["dirs"]]
     stats = {os.path.join(rel, d): man.get("stats", {}).get(d, {})
              for d in man["dirs"]}
-    new_man = {"version": 1, "mode": "clone", "dirs": dirs,
+    new_man = {"mode": "clone", "dirs": dirs,
                "stats": stats, "seq": {d: 0 for d in dirs},
-               "ts": _commit_ts(),
                "cloned_from": {"table": os.path.abspath(src_dir),
                                "version": version}}
-    mdir = os.path.join(dst_dir, SNAP_MANIFESTS)
-    os.makedirs(mdir, exist_ok=True)
-    tmp = os.path.join(mdir, f".tmp-{uuid.uuid4().hex[:12]}")
-    with open(tmp, "w") as fh:
-        json.dump(new_man, fh)
-    try:
-        os.link(tmp, os.path.join(mdir, "v1.json"))
-    except FileExistsError:
-        raise ValueError(f"clone target {dst_dir} already has "
-                         "snapshots") from None
-    finally:
-        os.remove(tmp)
-    return 1
+
+    def build(latest, prior):
+        if latest is not None:
+            raise ValueError(f"clone target {dst_dir} already has "
+                             "snapshots")
+        return new_man
+
+    return _snap_publish(dst_dir, build)
 
 
 def snapshot_history(spark: SparkSession, table_dir: str) -> DataFrame:
@@ -1547,8 +1401,8 @@ def compact_snapshot_zorder(spark: SparkSession, table_dir: str,
     partitioned by z-bucket (bucket bounds from approxQuantile over
     the z key — sampled, so skewed keys still yield balanced dirs);
     the bucket subdirs are then RENAMED into data/ as ordinary
-    commit dirs and the manifest publishes through the same atomic
-    os.link as every commit.  Time travel over prior versions is
+    commit dirs and the manifest publishes through ``_snap_publish``
+    like every commit.  Time travel over prior versions is
     untouched.
 
     ``x_col``/``y_col`` take a name or a Column: bit interleaving
@@ -1619,43 +1473,28 @@ def compact_snapshot_zorder(spark: SparkSession, table_dir: str,
         # a failed write/rename must not orphan the staging dir under
         # data/ until vacuum's age-gated reaper finds it
         shutil.rmtree(staging, ignore_errors=True)
-    mdir = os.path.join(table_dir, SNAP_MANIFESTS)
-    while True:
-        vs = _snap_versions(table_dir)
-        new_v = vs[-1] + 1
-        if vs[-1] != version:
-            # a commit landed after the rewrite read.  Compaction is
-            # only content-neutral against the state it READ: if the
-            # latest manifest's dirs or deletes differ from the base
-            # version's, publishing would silently drop the winner's
-            # commit (last-writer-wins) — abort like merge does, the
-            # staged dirs are unreferenced and removed.
-            with open(os.path.join(mdir, f"v{vs[-1]}.json")) as fh:
-                cur = json.load(fh)
-            if (cur["dirs"] != base_man["dirs"]
-                    or cur.get("deletes", []) !=
-                    base_man.get("deletes", [])):
-                for d in dirs:
-                    shutil.rmtree(os.path.join(table_dir, "data", d),
-                                  ignore_errors=True)
-                raise ConcurrentSnapshotCompaction(
-                    f"{table_dir} changed concurrently (v{version} → "
-                    f"v{vs[-1]}); z-order rewrite computed against "
-                    f"v{version} aborted")
-        man = {"version": new_v, "mode": "overwrite", "dirs": dirs,
-               "stats": stats, "seq": {d: new_v for d in dirs},
-               "ts": _commit_ts()}
-        tmp = os.path.join(mdir, f".tmp-{uuid.uuid4().hex[:12]}")
-        with open(tmp, "w") as fh:
-            json.dump(man, fh)
-        try:
-            os.link(tmp, os.path.join(mdir, f"v{new_v}.json"))
-            _snap_maybe_checkpoint(table_dir, new_v)
-            return new_v
-        except FileExistsError:
-            continue        # lost the race: re-check content, retry
-        finally:
-            os.remove(tmp)
+
+    def build(latest, prior):
+        # a commit landed after the rewrite read.  Compaction is only
+        # content-neutral against the state it READ: if the latest
+        # manifest's dirs or deletes differ from the base version's,
+        # publishing would silently drop the winner's commit
+        # (last-writer-wins) — abort like merge does, the staged dirs
+        # are unreferenced and removed.
+        if latest != version and (
+                prior["dirs"] != base_man["dirs"]
+                or prior.get("deletes", []) != base_man.get("deletes", [])):
+            for d in dirs:
+                shutil.rmtree(os.path.join(table_dir, "data", d),
+                              ignore_errors=True)
+            raise ConcurrentSnapshotCompaction(
+                f"{table_dir} changed concurrently (v{version} → "
+                f"v{latest}); z-order rewrite computed against "
+                f"v{version} aborted")
+        return {"mode": "overwrite", "dirs": dirs, "stats": stats,
+                "seq": {d: latest + 1 for d in dirs}}
+
+    return _snap_publish(table_dir, build)
 
 
 def compact_snapshot(spark: SparkSession, table_dir: str,
@@ -1969,8 +1808,8 @@ def merge_into_snapshot(spark: SparkSession, table_dir: str,
        including unmatched-U drop, applies verbatim), and staged as
        ONE new commit dir;
     4. the new manifest (carried dirs + the new dir, carried stats +
-       fresh stats) publishes through the same atomic os.link as
-       every other commit.  Mode is recorded as ``"merge"``.
+       fresh stats) publishes through ``_snap_publish`` like every
+       other commit.  Mode is recorded as ``"merge"``.
 
     Scale: a merge on a key-clustered table reads and rewrites only
     the overlapping dirs — the 100 TB shape; on an unclustered table
@@ -2071,8 +1910,7 @@ def merge_into_snapshot(spark: SparkSession, table_dir: str,
     merged.write.mode("error").parquet(data_dir)
     stats = _snap_commit_stats(spark, data_dir)
     prior_seq = man.get("seq", {})
-    new_man = {"version": version + 1, "mode": "merge",
-               "ts": _commit_ts(),
+    new_man = {"mode": "merge",
                "dirs": carried + [commit],
                "stats": {**{d: st[d] for d in carried if d in st},
                          commit: stats},
@@ -2088,14 +1926,10 @@ def merge_into_snapshot(spark: SparkSession, table_dir: str,
         new_man["deletes"] = live_dels
     if tag is not None:
         new_man["tag"] = tag
-    tmp = os.path.join(mdir, f".tmp-{uuid.uuid4().hex[:12]}")
-    with open(tmp, "w") as fh:
-        json.dump(new_man, fh)
-    try:
-        os.link(tmp, os.path.join(mdir, f"v{version + 1}.json"))
-        _snap_maybe_checkpoint(table_dir, version + 1)
-        return version + 1
-    except FileExistsError:
+
+    def build(latest, prior):
+        if latest == version:
+            return new_man
         shutil.rmtree(data_dir, ignore_errors=True)
         # the race we lost may have been our own replayed twin (same
         # tag): that is the write_snapshot_tagged no-op contract, not
@@ -2105,8 +1939,8 @@ def merge_into_snapshot(spark: SparkSession, table_dir: str,
         raise ConcurrentSnapshotMerge(
             f"version {version + 1} of {table_dir} was committed "
             f"concurrently; merge computed against v{version} aborted")
-    finally:
-        os.remove(tmp)
+
+    return _snap_publish(table_dir, build)
 
 
 def delete_from_snapshot(spark: SparkSession, table_dir: str,
@@ -2145,7 +1979,6 @@ def delete_from_snapshot(spark: SparkSession, table_dir: str,
     so deletions surface as 'delete' rows; the snapshot STREAM emits
     nothing for a delete commit (no new dirs — the documented
     no-retraction contract, Delta's ``ignoreDeletes``)."""
-    import json
     import shutil
     import uuid
 
@@ -2166,36 +1999,23 @@ def delete_from_snapshot(spark: SparkSession, table_dir: str,
     dcommit = f"d-{uuid.uuid4().hex[:12]}"
     ddir = os.path.join(table_dir, "data", dcommit)
     ks.coalesce(1).write.mode("error").parquet(ddir)
-    mdir = os.path.join(table_dir, SNAP_MANIFESTS)
-    while True:
-        vs = _snap_versions(table_dir)
+
+    def build(latest, prior):
         if tag is not None and tag in _committed_tags(table_dir):
             shutil.rmtree(ddir, ignore_errors=True)
             return None
-        version = vs[-1] + 1
-        with open(os.path.join(mdir, f"v{vs[-1]}.json")) as fh:
-            prior = json.load(fh)
-        man = {"version": version, "mode": "delete",
-               "ts": _commit_ts(),
+        man = {"mode": "delete",
                "dirs": prior["dirs"], "stats": prior.get("stats", {}),
                "seq": prior.get("seq", {}),
                "deletes": _live_deletes(prior.get("deletes", []),
                                         prior["dirs"],
                                         prior.get("seq", {}))
-               + [{"dir": dcommit, "key": key_cols, "seq": version}]}
+               + [{"dir": dcommit, "key": key_cols, "seq": latest + 1}]}
         if tag is not None:
             man["tag"] = tag
-        tmp = os.path.join(mdir, f".tmp-{uuid.uuid4().hex[:12]}")
-        with open(tmp, "w") as fh:
-            json.dump(man, fh)
-        try:
-            os.link(tmp, os.path.join(mdir, f"v{version}.json"))
-            _snap_maybe_checkpoint(table_dir, version)
-            return version
-        except FileExistsError:
-            continue        # rebase onto the new latest and retry
-        finally:
-            os.remove(tmp)
+        return man
+
+    return _snap_publish(table_dir, build)
 
 
 def vacuum_snapshots(table_dir: str, keep: int = 2,

@@ -950,14 +950,15 @@ def build_bloom_store(bench_docs: DataFrame, store_dir: str) -> None:
     WORD table (w, bits) — the decontamination signature store a
     streaming curation job probes per batch (llm/bloomfilter.py;
     m/64 rows total, kilobytes on disk)."""
-    from ..llm.bloomfilter import DECON_N, bloom_words
+    from ..llm.bloomfilter import BLOOM_M, DECON_N
     from ..llm.dedup import shingles
+    from ..operators import bloom
 
     grams = (bench_docs
              .select(F.explode(shingles("text", DECON_N)).alias("g"))
              .distinct())
-    bloom_words(grams).coalesce(1).write.mode("overwrite") \
-        .parquet(store_dir)
+    bloom.words(grams, F.col("g"), BLOOM_M).coalesce(1) \
+        .write.mode("overwrite").parquet(store_dir)
 
 
 def bloom_decontam_stream(docs: DataFrame, store_dir: str,

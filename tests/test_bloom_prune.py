@@ -41,3 +41,26 @@ def test_bloom_absent_key_reads_nothing_or_fp(spark, sf_dir, tmp_path):
     # still exactly empty (blooms skip, never answer)
     assert df.count() == 0
     assert read <= total
+
+
+def test_cross_typed_probe_never_prunes(spark, tmp_path):
+    """An int probe against a DOUBLE key: Spark renders the stored
+    key as "107.0", the probe as "107", so the sidecar cannot prove
+    absence — every file is read and the exact filter answers."""
+    out = str(tmp_path / "double_bloom")
+    df = spark.range(200).select(F.col("id").cast("double").alias("k"))
+    storage.write_with_bloom(df, out, "k", n_files=4)
+    got, read, total = storage.read_bloom_pruned(spark, out, 107)
+    assert [r["k"] for r in got.collect()] == [107.0]
+    assert read == total == 4
+
+
+def test_null_keys_set_no_bits(spark, tmp_path):
+    """NULL keys are left out of the filters instead of breaking the
+    sidecar build; lookups of present keys still answer exactly."""
+    out = str(tmp_path / "null_bloom")
+    df = spark.createDataFrame([(1,), (None,), (3,)], "k long")
+    storage.write_with_bloom(df, out, "k", n_files=2)
+    got, read, _ = storage.read_bloom_pruned(spark, out, 3)
+    assert [r["k"] for r in got.collect()] == [3]
+    assert read >= 1

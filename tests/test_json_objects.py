@@ -1,7 +1,7 @@
-"""Byte-parity object sink: one gzip JSON object per chip under
-{entity}/{x}-{y}.json, matching the reference's Ceph layout
-(ceph.py:338-351) — gzip body, .json key, a list of record dicts per
-chip, deterministic bytes."""
+"""Byte-parity object sink (sources.objectsink): one gzip JSON object
+per chip under {entity}/{x}-{y}.json, matching the reference's Ceph
+layout (ceph.py:338-351) — gzip body, .json key, a list of record
+dicts per chip, deterministic bytes, plus a commit manifest."""
 
 import gzip
 import json
@@ -10,6 +10,7 @@ import os
 import pytest
 
 from lcmap_blackmagic_spark import storage
+from lcmap_blackmagic_spark.sources.objectsink import write_objects
 
 
 @pytest.fixture(scope="module")
@@ -23,10 +24,15 @@ def segs(spark):
 
 
 def test_layout_and_roundtrip(segs, tmp_path):
-    n = storage.write_chip_json_objects(segs, str(tmp_path), "segment")
-    assert n == 2  # two chips -> two objects
-    names = sorted(os.listdir(tmp_path / "segment"))
+    write_objects(segs, str(tmp_path), "segment")
+    names = sorted(f for f in os.listdir(tmp_path / "segment")
+                   if not f.startswith("_"))
     assert names == ["-2058585-1922805.json", "-2061585-1922805.json"]
+    # the commit manifest lists every object: two chips -> two objects
+    man = json.loads((tmp_path / "segment" / "_manifest.json").read_text())
+    assert man["n_objects"] == 2
+    assert {tuple(k[:2]) for k in man["objects"]} == \
+        {(-2061585, 1922805), (-2058585, 1922805)}
 
     got = storage.read_chip_json(str(tmp_path), "segment", -2061585, 1922805)
     assert len(got) == 3
@@ -38,9 +44,11 @@ def test_layout_and_roundtrip(segs, tmp_path):
 
 def test_bytes_are_gzip_json_and_deterministic(segs, tmp_path):
     a, b = tmp_path / "a", tmp_path / "b"
-    storage.write_chip_json_objects(segs, str(a), "segment")
-    storage.write_chip_json_objects(segs.repartition(7), str(b), "segment")
+    write_objects(segs, str(a), "segment")
+    write_objects(segs.repartition(7), str(b), "segment")
     for name in os.listdir(a / "segment"):
+        if name.startswith("_"):
+            continue
         raw_a = (a / "segment" / name).read_bytes()
         raw_b = (b / "segment" / name).read_bytes()
         # the reference stores gzip bodies under the .json key
@@ -51,31 +59,7 @@ def test_bytes_are_gzip_json_and_deterministic(segs, tmp_path):
         assert raw_a == raw_b
 
 
-# ---- DataSource-writer twin (Spark 4 sink API) --------------------
-
-def test_datasource_writer_byte_parity(segs, tmp_path):
-    """The chipobjects DataSource writer must produce BYTE-identical
-    objects to the applyInPandas sink, plus a commit manifest
-    listing every object — the engine-integrated form of the same
-    Ceph layout."""
-    from lcmap_blackmagic_spark.sources.objectsink import write_objects
-
-    a, b = tmp_path / "pandas", tmp_path / "dsv2"
-    storage.write_chip_json_objects(segs, str(a), "segment")
-    write_objects(segs, str(b), "segment")
-    names_a = sorted(f for f in os.listdir(a / "segment"))
-    names_b = sorted(f for f in os.listdir(b / "segment")
-                     if not f.startswith("_"))
-    assert names_a == names_b
-    for name in names_a:
-        # raw-byte parity (both sinks gzip with mtime=0)
-        assert (a / "segment" / name).read_bytes() \
-            == (b / "segment" / name).read_bytes()
-    man = json.loads((b / "segment" / "_manifest.json").read_text())
-    assert man["n_objects"] == 2
-    assert {tuple(k[:2]) for k in man["objects"]} == \
-        {(-2061585, 1922805), (-2058585, 1922805)}
-
+# ---- commit protocol ------------------------------------------------
 
 def test_datasource_writer_overwrite_and_abort_safety(segs, tmp_path):
     """Overwrite mode removes committed objects absent from the job
@@ -85,7 +69,7 @@ def test_datasource_writer_overwrite_and_abort_safety(segs, tmp_path):
     from pyspark.sql import functions as FF
 
     from lcmap_blackmagic_spark.sources.objectsink import (
-        ObjectsCommit, _ObjectsWriter, write_objects)
+        ObjectsCommit, _ObjectsWriter)
 
     root = str(tmp_path / "store")
     write_objects(segs, root, "segment")

@@ -13,6 +13,8 @@ from pyspark.sql import functions as F
 from lcmap_blackmagic_spark import storage
 from lcmap_blackmagic_spark.mv import mv_read, mv_refresh, mv_watermark
 
+from .test_snapshots import _rival_at_commit_ts
+
 
 def _batch(spark, rows):
     return spark.createDataFrame(rows, "k long, v string")
@@ -43,6 +45,22 @@ def test_delete_subtracts_without_touching_data(spark):
     assert man["mode"] == "delete" and man["dirs"] == m1["dirs"]
     assert man["stats"] == m1["stats"]
     assert len(man["deletes"]) == 1 and man["deletes"][0]["seq"] == 2
+
+
+def test_delete_rebases_onto_rival_append(spark, monkeypatch):
+    """A rival append publishes inside the delete's publish window.
+    The delete rebases onto the append instead of clobbering it and,
+    meaning "delete these keys as of commit time", also removes the
+    matching rows the append brought in."""
+    t = tempfile.mkdtemp(prefix="sdel_")
+    storage.write_snapshot(_batch(spark, [(1, "a"), (2, "b")]), t)
+    _rival_at_commit_ts(monkeypatch, lambda: storage.write_snapshot(
+        _batch(spark, [(2, "B2"), (3, "c")]), t, mode="append"))
+    assert storage.delete_from_snapshot(spark, t, _keys(spark, [2]),
+                                        "k") == 3
+    assert _rows(spark, t, version=2) == \
+        [(1, "a"), (2, "B2"), (2, "b"), (3, "c")]
+    assert _rows(spark, t) == [(1, "a"), (3, "c")]
 
 
 def test_reinserted_key_survives_older_delete(spark):

@@ -4,6 +4,7 @@ append lineage, and optimistic-concurrency commit races."""
 import os
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from lcmap_blackmagic_spark import storage
@@ -107,6 +108,63 @@ def test_tagged_commit_race_rechecks_inside_publish_loop(spark):
     assert _vals(storage.read_snapshot(spark, t)) == [0, 1, 2, 3]
     # the loser's staged commit dir is reaped — only v1's dir remains
     assert len(os.listdir(os.path.join(t, "data"))) == 1
+
+
+def _rival_at_commit_ts(monkeypatch, rival):
+    """Run ``rival()`` once, from inside the next commit's publish
+    window: the commit timestamp is stamped after the writer read the
+    log and before it links its manifest, so the rival wins that
+    version and the writer loses a real publish race."""
+    real_ts = storage._commit_ts
+    fired = []
+
+    def hook():
+        if not fired:
+            fired.append(True)
+            rival()
+        return real_ts()
+
+    monkeypatch.setattr(storage, "_commit_ts", hook)
+
+
+def test_restore_race_lands_on_next_version(spark, monkeypatch):
+    """RESTORE that loses the publish race must not clobber the
+    winner: it rebuilds and lands on the next version, and the
+    winner's version stays readable."""
+    t = tempfile.mkdtemp(prefix="srstr_")
+    storage.write_snapshot(spark.createDataFrame([(1,)], "v long"), t)
+    storage.write_snapshot(spark.createDataFrame([(2,)], "v long"), t,
+                           mode="append")
+    _rival_at_commit_ts(monkeypatch, lambda: storage.write_snapshot(
+        spark.createDataFrame([(3,)], "v long"), t, mode="append"))
+    assert storage.restore_snapshot(t, 1) == 4
+    assert _vals(storage.read_snapshot(spark, t, version=3)) == [1, 2, 3]
+    assert _vals(storage.read_snapshot(spark, t)) == [1]
+
+
+def test_clone_race_onto_occupied_target_raises(spark, monkeypatch):
+    """A clone target that gains a v1 while the clone publishes is
+    no longer a NEW table: the clone refuses with ValueError and the
+    rival's v1 is left as it was."""
+    import json
+
+    src = tempfile.mkdtemp(prefix="clnsrc_")
+    storage.write_snapshot(
+        spark.range(3).select(F.col("id").alias("v")), src)
+    dst = os.path.join(tempfile.mkdtemp(prefix="clndst_"), "t")
+    mdir = os.path.join(dst, storage.SNAP_MANIFESTS)
+
+    def rival():
+        os.makedirs(mdir, exist_ok=True)
+        with open(os.path.join(mdir, "v1.json"), "x") as fh:
+            json.dump({"version": 1, "mode": "rival", "dirs": []}, fh)
+
+    _rival_at_commit_ts(monkeypatch, rival)
+    with pytest.raises(ValueError, match="already has"):
+        storage.clone_snapshot(src, dst)
+    with open(os.path.join(mdir, "v1.json")) as fh:
+        assert json.load(fh)["mode"] == "rival"
+    assert storage.latest_version(dst) == 1
 
 
 def test_data_skipping_prunes_commit_dirs(spark):
